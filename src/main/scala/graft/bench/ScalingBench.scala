@@ -39,7 +39,7 @@ object ScalingBench {
     val ownCorpus = args.lift(3).isEmpty
     val corpusDir = args.lift(3).getOrElse {
       val d = Files.createTempDirectory("graft_bench_corpus").toString
-      val s = session(8)
+      val s = graft.Sessions.local("graft-gen")
       graft.gen.WriteCorpus.write(s, d, nConvs)
       s.stop()
       org.apache.spark.sql.SparkSession.clearActiveSession()
@@ -94,7 +94,7 @@ object ScalingBench {
       .withDefaultValue(Vector.empty)
     var nTurns = 0L
     for (cycle <- 1 to cycles; c <- curveCores) {
-      val s = session(c)
+      val s = graft.Sessions.local(s"graft-scaling-$c", c)
       if (cycle == 1) timedRun(s) // warm-up (JIT + codegen + page cache)
       val reps = math.max(2, repsFor(c) / cycles)
       for (rep <- 1 to reps) {
@@ -178,26 +178,5 @@ object ScalingBench {
     Files.writeString(Paths.get(outMd), md)
     println(md)
     println(s"[scaling-bench] wrote $outMd")
-  }
-
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // partition-size tuning (the 100 TB playbook applied at bench
-      // scale): the 2.5M-turn corpus scans as ~17 128MB-default splits
-      // — ONE task wave at 16 cores, so the slowest straggler (skewed
-      // long conversations) set the wall clock and 4→16 efficiency
-      // read 0.75 for a purely structural reason. 16MB splits give
-      // every config ≥4 waves; measured floors: 4-core 8.7→7.2s,
-      // 16-core 2.9→2.2s (with the GC heap fix in build.sbt).
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

@@ -90,18 +90,10 @@ object StressBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cores = args.lift(0).getOrElse("32")
     val cycles = sys.env.getOrElse("GRAFT_STRESS_CYCLES", "3").toInt
     val mult = sys.env.getOrElse("GRAFT_STRESS_MULT", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-stress",
+      args.lift(0).fold(graft.Sessions.defaultCores)(_.toInt))
     spark.sparkContext.setLogLevel("ERROR")
 
     val work = java.nio.file.Files.createTempDirectory("graft_stress").toString

@@ -603,13 +603,19 @@ object Dedup {
       // key q·2⁴⁸ + (2⁴⁸−1−doc_id) makes max() pick (max quality,
       // min doc_id) — identical winner, since q ≤ 10⁴ dominates and
       // the complemented doc_id breaks ties downward; exact integer
-      // arithmetic while doc_id < 2⁴⁸ (q·2⁴⁸+2⁴⁸ ≈ 2.8e18 < 2⁶³)
+      // arithmetic while doc_id < 2⁴⁸ (q·2⁴⁸+2⁴⁸ ≈ 2.8e18 < 2⁶³).
+      // That domain is enforced in the same aggregate: a cluster whose
+      // min/max doc_id leaves [0, 2⁴⁸) fails the query, never a
+      // silently wrong keeper
       val M = 1L << 48
       val stats = alld.groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("cluster_size"),
-          max(col("quality_x1e4") * M + (lit(M - 1) - col("doc_id"))).as("bk"))
+          max(col("quality_x1e4") * M + (lit(M - 1) - col("doc_id"))).as("bk"),
+          min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
         .select(col("cluster_id"), col("cluster_size"),
-          (lit(M - 1) - pmod(col("bk"), lit(M))).as("win"))
+          when(col("lo") < 0 || col("hi") >= M,
+            raise_error(lit("d13_cluster_keepbest: doc_id outside [0, 2^48)")))
+            .otherwise(lit(M - 1) - pmod(col("bk"), lit(M))).as("win"))
       alld.join(stats, Seq("cluster_id"))
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
           col("quality_x1e4"), (col("doc_id") === col("win")).as("keep"))

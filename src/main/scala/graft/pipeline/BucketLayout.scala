@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * every write task held rows of ~every bucket and a 64-task write
   * emitted tasks × buckets ≈ 4096 files — each with its own parquet
   * footer and commit-time rename (measured 9.2 s vs 6.7 s for a
-  * bucket-contiguous layout on the 2.5M-turn corpus; WritePathBench).
+  * bucket-contiguous layout on the 2.5M-turn corpus; BENCH/BASELINE.md).
   * `repartitionByRange` fixes the file count but costs a SAMPLING JOB
   * that re-computes the upstream extraction a second time — wrong at
   * any scale where extraction dominates.
@@ -26,13 +26,11 @@ import org.apache.spark.sql.functions._
   * (BucketLayoutSpec), so a Spark release that changed the internal
   * hash would fail loudly, not scatter silently.
   *
-  * Scale: one resume bucket per task is right while a bucket's rows
-  * fit one write task (10M turns / 64 buckets here). At 10^12-turn
-  * scale a 1024-bucket corpus still has ~10^9-turn buckets, so
-  * [[ResumableExtract.run]] exposes `filesPerBucket`: pid becomes
-  * `bucket * K + (xxhash64(conv_id) mod K)` and each bucket writes K
-  * sorted files from K parallel tasks — file count stays
-  * buckets × K by construction, never tasks × buckets.
+  * Scale: [[ResumableExtract.run]] places one resume bucket per task,
+  * which is right while a bucket's rows fit one write task (10M turns
+  * / 64 buckets here). At 10^12-turn scale raise `nBuckets` until
+  * buckets are task-sized again — file count stays one per bucket by
+  * construction, never tasks × buckets.
   */
 object BucketLayout {
 

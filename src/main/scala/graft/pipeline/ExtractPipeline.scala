@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.kernel.Extractor
 import graft.model._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -48,39 +49,32 @@ object ExtractPipeline {
 
   /** Extraction stage. `partitions <= 0` leaves the input partitioning
     * untouched (small/test inputs); otherwise salted-repartitions so
-    * skewed conversations spread across the cluster. */
+    * skewed conversations spread across the cluster: a conversation's
+    * turns hash on (conv_id, turn_idx mod 64), at most 64 keys. */
   def extract(
       turns: Dataset[Turn],
       metrics: Metrics,
-      partitions: Int = 0,
-      saltBuckets: Int = 64): Dataset[ExtractedTurn] = {
+      partitions: Int = 0): Dataset[ExtractedTurn] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val repartitioned =
       if (partitions <= 0) turns
       else turns.repartition(partitions,
-        xxhash64($"conv_id", pmod($"turn_idx", lit(saltBuckets))))
+        xxhash64($"conv_id", pmod($"turn_idx", lit(64))))
     repartitioned.mapPartitions { it =>
       // one pooled kernel + counter set per partition; counters flush
-      // into accumulators when the partition iterator drains
+      // into accumulators when the task ends, drained or not (a limit
+      // above this island stops pulling early)
       val ctr = new Extractor.Counters
-      var flushed = false
-      new Iterator[ExtractedTurn] {
-        override def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !flushed) {
-            flushed = true
-            metrics.turns.add(ctr.turns)
-            metrics.boxesIn.add(ctr.boxesIn)
-            metrics.boxesDropped.add(ctr.boxesDropped)
-            metrics.cellsOut.add(ctr.cellsOut)
-            metrics.blocksKept.add(ctr.blocksKept)
-            metrics.blocksDropped.add(ctr.blocksDropped)
-          }
-          h
-        }
-        override def next(): ExtractedTurn = Extractor.extract(it.next(), ctr)
+      TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+        metrics.turns.add(ctr.turns)
+        metrics.boxesIn.add(ctr.boxesIn)
+        metrics.boxesDropped.add(ctr.boxesDropped)
+        metrics.cellsOut.add(ctr.cellsOut)
+        metrics.blocksKept.add(ctr.blocksKept)
+        metrics.blocksDropped.add(ctr.blocksDropped)
       }
+      it.map(Extractor.extract(_, ctr))
     }
   }
 

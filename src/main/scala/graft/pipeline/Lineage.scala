@@ -25,8 +25,8 @@ import java.sql.Timestamp
   *
   * Scale note: bucketing by conv-hash keeps resume units coarse
   * (10^12 turns / e.g. 1024 buckets ≈ 10^9 turns per unit) while the
-  * inner job still salt-repartitions within the selected buckets, so
-  * skew handling is unchanged.
+  * kernel still runs on the scan partitions, so a long conversation is
+  * spread by the input's splits, never funnelled through one task.
   */
 final class LineageStore(io: TableIO) {
 
@@ -79,42 +79,19 @@ object ResumableExtract {
       turns: Dataset[Turn],
       outDir: String,
       nBuckets: Int = 16,
-      partitions: Int = 0,
-      runId: String = "run",
-      filesPerBucket: Int = 1): Set[Int] =
+      runId: String = "run"): Set[Int] =
     run(spark, turns, new ParquetTableIO(outDir, LineageStore.DataWriteOptions),
-      nBuckets, partitions, runId, filesPerBucket)
+      nBuckets, runId)
 
   /** Same run/resume protocol through any [[TableIO]] — this is the
     * entry the cluster uses with [[IcebergTableIO]] (snapshot commits
-    * instead of the parquet two-write protocol).
-    *
-    * @param filesPerBucket write parallelism WITHIN a resume bucket:
-    *        each bucket's rows land on exactly this many tasks (split
-    *        by conv hash), producing exactly this many sorted files
-    *        per bucket partition. 1 is right while a bucket fits one
-    *        write task; raise it when buckets outgrow task-sized
-    *        units (10^12 turns / 1024 buckets ⇒ ~10^9-turn buckets ⇒
-    *        filesPerBucket ~ 10^3) — file count stays
-    *        buckets × filesPerBucket, never tasks × buckets. */
+    * instead of the parquet two-write protocol). */
   def run(
       spark: SparkSession,
       turns: Dataset[Turn],
       io: TableIO,
       nBuckets: Int,
-      partitions: Int,
-      runId: String): Set[Int] =
-    run(spark, turns, io, nBuckets, partitions, runId, filesPerBucket = 1)
-
-  def run(
-      spark: SparkSession,
-      turns: Dataset[Turn],
-      io: TableIO,
-      nBuckets: Int,
-      partitions: Int,
-      runId: String,
-      filesPerBucket: Int): Set[Int] = {
-    require(filesPerBucket >= 1, s"filesPerBucket must be >= 1, got $filesPerBucket")
+      runId: String): Set[Int] = {
     import spark.implicits._
     val store = new LineageStore(io)
     val done = store.completedBuckets(spark)
@@ -129,19 +106,19 @@ object ResumableExtract {
       .as[Turn]
 
     val extracted = ExtractPipeline
-      .extract(withBucket, metrics, partitions = partitions)
+      .extract(withBucket, metrics)
       .withColumn("bucket", bucketOf($"conv_id", nBuckets))
 
     // dynamic overwrite: only the pending buckets' partitions are
     // replaced; completed buckets' data is untouched. Two write-path
-    // invariants, both measured (WritePathBench):
+    // invariants, both measured (BENCH/BASELINE.md, rounds 4-5):
     //  - the sort is PREFIXED WITH THE PARTITION COLUMN, so the
     //    partitioned writer stays on its single-writer path (no
     //    re-sort, no open-writer-per-partition-value; 3.6× on the
     //    identical write in round 4);
     //  - rows are placed EXACTLY on their bucket's task
     //    (BucketLayout.exactRepartition), so the write emits
-    //    buckets × filesPerBucket files — the round-4 hash
+    //    one file per bucket — the round-4 hash
     //    repartition on (bucket, conv_id) mixed every bucket into
     //    every task and a 64-task write emitted ~4096 files, each
     //    with its own footer and commit rename (9.2 s vs 6.7 s for
@@ -150,12 +127,8 @@ object ResumableExtract {
     //    re-compute the extraction upstream a second time).
     // Within each bucket the (conv_id, turn_idx) W2 layout is
     // unchanged.
-    val pid =
-      if (filesPerBucket == 1) $"bucket"
-      else $"bucket" * filesPerBucket +
-        pmod(xxhash64($"conv_id"), lit(filesPerBucket.toLong)).cast("int")
     store.writeData(
-      BucketLayout.exactRepartition(extracted, pid, nBuckets * filesPerBucket)
+      BucketLayout.exactRepartition(extracted, $"bucket", nBuckets)
         .sortWithinPartitions($"bucket", $"conv_id", $"turn_idx"))
 
     // lineage rows from the data just written (cheap agg over the
@@ -164,7 +137,7 @@ object ResumableExtract {
     // bounded, bucket-count-sized result, never data-sized) and the
     // append runs from the local rows: leaving it lazy re-ran the
     // full written-data scan a second time inside the append
-    // (measured ~1.5 s of the 10M-turn EndToEnd).
+    // (measured ~1.5 s of a 10M-turn run).
     val now = new Timestamp(System.currentTimeMillis())
     val stats = store.readData(spark)
       .filter(col("bucket").isin(pending.toSeq: _*))

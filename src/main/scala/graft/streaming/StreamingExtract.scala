@@ -24,34 +24,40 @@ object StreamingExtract {
     StructField("tool", StringType),
     StructField("ts", TimestampType)))
 
-  /** One streaming extraction, any file-source FORMAT: the source
-    * node is the only format-specific piece; the kernel and every
-    * downstream stage are format-agnostic (a one-sided edit to a
-    * per-format copy was the divergence risk). */
-  private def extractStreamAs(spark: SparkSession, inDir: String,
-                              format: String): Dataset[ExtractedTurn] = {
+  /** The turn source every streaming job reads, any file-source
+    * FORMAT: the source node is the only format-specific piece; the
+    * kernel and every downstream stage are format-agnostic (a
+    * one-sided edit to a per-format copy was the divergence risk). */
+  private def turnStream(spark: SparkSession, inDir: String, maxFilesPerTrigger: Int,
+                         format: String = "parquet"): Dataset[Turn] = {
     import spark.implicits._
     spark.readStream
       .schema(turnSchema)
-      .option("maxFilesPerTrigger", "16")
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .format(format)
       .load(inDir)
       .as[Turn]
-      .mapPartitions { it =>
-        val ctr = new Extractor.Counters // pooled per partition
-        it.map(t => Extractor.extract(t, ctr))
-      }
+  }
+
+  /** The batch kernel over a turn stream, one pooled counter set per
+    * partition. */
+  private def kernel(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
+    import turns.sparkSession.implicits._
+    turns.mapPartitions { it =>
+      val ctr = new Extractor.Counters
+      it.map(t => Extractor.extract(t, ctr))
+    }
   }
 
   /** Streaming per-turn extraction over a parquet directory source. */
   def extractStream(spark: SparkSession, inDir: String): Dataset[ExtractedTurn] =
-    extractStreamAs(spark, inDir, "parquet")
+    kernel(turnStream(spark, inDir, 16))
 
   /** The same streaming extraction over a JSON-LINES source — the
     * second ingest format (transcript dumps commonly arrive as JSONL
     * exports rather than parquet). */
   def extractStreamJson(spark: SparkSession, inDir: String): Dataset[ExtractedTurn] =
-    extractStreamAs(spark, inDir, "json")
+    kernel(turnStream(spark, inDir, 16, "json"))
 
   /** Event-time windowed extraction metrics with a watermark: counts
     * of turns and extracted cells per (1-minute window, tool), late
@@ -60,11 +66,7 @@ object StreamingExtract {
   def windowedMetrics(spark: SparkSession, inDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    spark.readStream
-      .schema(turnSchema)
-      .option("maxFilesPerTrigger", "16")
-      .parquet(inDir)
-      .as[Turn]
+    turnStream(spark, inDir, 16)
       .mapPartitions { it =>
         val ctr = new Extractor.Counters
         it.map { t =>
@@ -91,11 +93,7 @@ object StreamingExtract {
                      watermarkDelay: String = "48 hours"): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    spark.readStream
-      .schema(turnSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(inDir)
-      .as[Turn]
+    turnStream(spark, inDir, 4)
       .mapPartitions { it =>
         val ctr = new Extractor.Counters
         it.map { t =>
@@ -122,20 +120,10 @@ object StreamingExtract {
     * classic streaming-state OOM. The delay is a parameter because
     * the caller knows the source's redelivery horizon. */
   def dedupedExtractStream(spark: SparkSession, inDir: String,
-                           watermarkDelay: String = "48 hours"): Dataset[ExtractedTurn] = {
-    import spark.implicits._
-    spark.readStream
-      .schema(turnSchema)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(inDir)
+                           watermarkDelay: String = "48 hours"): Dataset[ExtractedTurn] =
+    kernel(turnStream(spark, inDir, 4)
       .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
-      .as[Turn]
-      .mapPartitions { it =>
-        val ctr = new Extractor.Counters
-        it.map(t => Extractor.extract(t, ctr))
-      }
-  }
+      .dropDuplicatesWithinWatermark("conv_id", "turn_idx"))
 
   /** Running per-conversation progress as CUSTOM streaming state
     * (SURVEY §2.10 / K5): `flatMapGroupsWithState` keyed on conv_id

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.Multimodal
 import graft.streaming.StreamingExtract
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end drive of the engine's surfaces — extraction, BOM
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-demo")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

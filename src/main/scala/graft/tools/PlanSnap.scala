@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for every SparkEntry query to
   * `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence an
-  * optimization round commits alongside its claims. Session config
-  * mirrors Bench (same master/shuffle-partitions/split sizing) so the
-  * captured plans are the shapes the bench actually runs.
+  * optimization round commits alongside its claims. The session is
+  * [[graft.Sessions.local]], Bench's settings, so the captured plans
+  * are the shapes the bench actually runs.
   *
   * Usage: runMain graft.tools.PlanSnap [sfDir] [outDir] [suffix] [query...]
   */
@@ -16,18 +14,8 @@ object PlanSnap {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val outDir = args.lift(1).getOrElse("plans/r06")
     val suffix = args.lift(2).getOrElse("before")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = args.drop(3).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plansnap")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-plansnap")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = new java.io.File(outDir)
     dir.mkdirs()

@@ -1,10 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Times SparkEntry queries with warm-up + reps in a single session
-  * (host CPU fluctuates — compare mins across variants).
+  * (host CPU fluctuates — compare mins across variants). To include
+  * the recompile the cycle-major bench pays (96 queries evict Spark's
+  * 100-entry whole-stage-codegen cache), shrink that static cache:
+  * `GRAFT_JVM_OPTS="-Dspark.sql.codegen.cache.maxEntries=1"`.
   * Usage: runMain graft.tools.QueryTime <name[,name…]> [sfDir] [reps] [cores]
   */
 object QueryTime {
@@ -12,18 +14,8 @@ object QueryTime {
     val names = args(0).split(",").toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(4)
-    val cores = args.lift(3).getOrElse("32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // GRAFT_QT_CODEGEN_CACHE=1 simulates the bench's whole-stage-codegen
-    // cache eviction (96 queries > the 100-entry cache), so per-rep
-    // numbers include the recompile the cycle-major bench pays
-    sys.env.get("GRAFT_QT_CODEGEN_CACHE")
-      .foreach(v => builder.config("spark.sql.codegen.cache.maxEntries", v))
-    val spark = builder.getOrCreate()
+    val spark = graft.Sessions.local("graft-qtime",
+      args.lift(3).fold(graft.Sessions.defaultCores)(_.toInt))
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)

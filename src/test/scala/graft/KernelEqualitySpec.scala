@@ -140,32 +140,42 @@ class KernelEqualitySpec extends AnyFunSuite {
   }
 
   test("FastScan never throws and equals jackson on fuzzed JSON-ish bytes") {
-    val rnd = new Random(31L)
+    // junk strings, then mutations of VALID payloads (truncations +
+    // single-char flips), all drawn from one seeded stream
+    def fuzz(seed: Long, alphabet: String, nJunk: Int, maxLen: Int,
+             payloads: Seq[String], flipsPer: Int): Unit = {
+      val rnd = new Random(seed)
+      for (i <- 0 until nJunk) {
+        val len = rnd.nextInt(maxLen)
+        val junk = "{" + Array.fill(len)(alphabet(rnd.nextInt(alphabet.length))).mkString
+        val a = PayloadCodec.decode(junk)
+        val b = PayloadCodec.decodeJackson(junk)
+        assert(a.boxes.toSeq == b.boxes.toSeq, s"seed $seed #$i: $junk")
+        assert(a.lines.toSeq == b.lines.toSeq && a.rects.toSeq == b.rects.toSeq,
+          s"seed $seed #$i: $junk")
+        assert((a.w, a.h, a.col) == (b.w, b.h, b.col), s"seed $seed #$i: $junk")
+      }
+      for (p <- payloads; _ <- 0 until flipsPer) {
+        val mutated =
+          if (rnd.nextBoolean()) p.substring(0, rnd.nextInt(p.length))
+          else {
+            val pos = rnd.nextInt(p.length)
+            p.substring(0, pos) + alphabet(rnd.nextInt(alphabet.length)) + p.substring(pos + 1)
+          }
+        val a = PayloadCodec.decode(mutated)
+        val b = PayloadCodec.decodeJackson(mutated)
+        assert(a.boxes.toSeq == b.boxes.toSeq, s"seed $seed: ${mutated.take(120)}")
+        assert((a.w, a.h, a.col) == (b.w, b.h, b.col), s"seed $seed: ${mutated.take(120)}")
+      }
+    }
+    def payloads(corpus: TranscriptGen.Corpus, n: Int): Seq[String] =
+      corpus.turns.filter(_.tool != Tool.HtmlMain).map(_.text).take(n)
     val alphabet = "{}[]\",:0123456789.eE+-qtcwh lines rects col boxes\\u00d8\n\t"
-    for (i <- 0 until 3000) {
-      val len = rnd.nextInt(80)
-      val junk = "{" + Array.fill(len)(alphabet(rnd.nextInt(alphabet.length))).mkString
-      val a = PayloadCodec.decode(junk)
-      val b = PayloadCodec.decodeJackson(junk)
-      assert(a.boxes.toSeq == b.boxes.toSeq, s"#$i: $junk")
-      assert(a.lines.toSeq == b.lines.toSeq && a.rects.toSeq == b.rects.toSeq, s"#$i: $junk")
-      assert((a.w, a.h, a.col) == (b.w, b.h, b.col), s"#$i: $junk")
-    }
-    // mutations of VALID payloads (truncations + single-char flips)
-    val corpus = TranscriptGen.corpus(nConvs = 5)
-    val payloads = corpus.turns.filter(_.tool != Tool.HtmlMain).map(_.text).take(50)
-    for (p <- payloads; _ <- 0 until 6) {
-      val mutated =
-        if (rnd.nextBoolean()) p.substring(0, rnd.nextInt(p.length))
-        else {
-          val pos = rnd.nextInt(p.length)
-          p.substring(0, pos) + alphabet(rnd.nextInt(alphabet.length)) + p.substring(pos + 1)
-        }
-      val a = PayloadCodec.decode(mutated)
-      val b = PayloadCodec.decodeJackson(mutated)
-      assert(a.boxes.toSeq == b.boxes.toSeq, mutated.take(120))
-      assert((a.w, a.h, a.col) == (b.w, b.h, b.col), mutated.take(120))
-    }
+    fuzz(31L, alphabet, 3000, 80, payloads(TranscriptGen.corpus(nConvs = 5), 50), 6)
+    // 40-seed sweep over a wider alphabet (the letters of true/false/null)
+    for (seed <- 1 to 40)
+      fuzz(seed * 7919L, alphabet + " truefalsn", 4000, 90,
+        payloads(TranscriptGen.corpus(nConvs = 3, seed = seed * 31L), 30), 8)
   }
 
   // ── randomized payloads ──────────────────────────────────────────

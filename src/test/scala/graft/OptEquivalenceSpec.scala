@@ -92,6 +92,20 @@ class OptEquivalenceSpec extends AnyFunSuite {
     assert(got == ref)
   }
 
+  test("d13 fails the query when a doc_id leaves the argmax key's [0, 2^48) domain") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_d13_domain").toString
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    // a twin of doc 0 whose id is one past the domain: it clusters with
+    // doc 0, and its complemented key would wrap into a wrong keeper
+    docs.union(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(1L << 48)))
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[Exception](
+      SparkEntry.queries("d13_cluster_keepbest")(spark, dir).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("doc_id outside [0, 2^48)")), e.toString)
+  }
+
   test("a10 HLL gate holds at every supported scale factor (advice r5)") {
     // the oracle pins hll_ok=true; Spark's approx_count_distinct error
     // is not hard-bounded by 3·rsd, so assert the gate in-repo at each

@@ -55,6 +55,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(metrics.cellsOut.value > 0 && metrics.boxesIn.value > 0)
   }
 
+  test("accumulators keep the counts of a partition a limit stops early") {
+    import spark.implicits._
+    val metrics = new ExtractPipeline.Metrics(spark)
+    val k = 5
+    val got = ExtractPipeline.extract(spark.createDataset(corpus.turns), metrics)
+      .limit(k).collect()
+    assert(got.length == k)
+    assert(metrics.turns.value >= k, s"turns=${metrics.turns.value} after limit($k)")
+  }
+
   test("input permutation and partitioning never change per-turn output") {
     import spark.implicits._
     val metrics = new ExtractPipeline.Metrics(spark)
@@ -314,11 +324,10 @@ class PipelineSpec extends AnyFunSuite {
     }
     try {
       val turns = spark.createDataset(corpus.turns)
-      val processed = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-        partitions = 0, runId = "cat")
+      val processed = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat")
       assert(processed == Set(0, 1, 2, 3))
-      assert(ResumableExtract.run(spark, turns, io, nBuckets = 4,
-        partitions = 0, runId = "cat").isEmpty, "completed run must be a no-op")
+      assert(ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat").isEmpty,
+        "completed run must be a no-op")
       // catalog data == plain-parquet pipeline data
       val got = io.read(spark, "data")
         .select("conv_id", "turn_idx", "extracted_text")
@@ -332,8 +341,7 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/lineage"))
       io.append(spark.createDataFrame(
         spark.sparkContext.parallelize(kept.toIndexedSeq), keep.schema), "lineage")
-      val resumed = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-        partitions = 0, runId = "cat2")
+      val resumed = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat2")
       assert(resumed == Set(2, 3))
       val after = io.read(spark, "data")
         .select("conv_id", "turn_idx", "extracted_text")

@@ -91,8 +91,7 @@ class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
     io.overwritePartitions(partial, "data", "bucket") // creates the table
     assert(io.read(spark, "data").count() < full.count())
 
-    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-      partitions = 0, runId = "crash")
+    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "crash")
     assert(done == Set(0, 1, 2, 3), "all buckets pending: no lineage existed")
     val data = io.read(spark, "data")
     assert(data.count() == corpus.turns.size, "partial bucket must be replaced")
@@ -106,8 +105,7 @@ class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
     import spark.implicits._
     val corpus = graft.gen.TranscriptGen.corpus(nConvs = 12)
     val turns = spark.createDataset(corpus.turns)
-    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4,
-      partitions = 0, runId = "v2run")
+    val done = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "v2run")
     assert(done == Set(0, 1, 2, 3))
     val data = io.read(spark, "data")
     assert(data.count() == corpus.turns.size)
@@ -119,7 +117,7 @@ class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(events.count(_ == "ns.data:overwriteDynamic") >= 0) // may be 0: first write created
     // resume: nothing pending, no further table writes
     val evBefore = events.size
-    assert(ResumableExtract.run(spark, turns, io, 4, 0, "v2run2") == Set.empty)
+    assert(ResumableExtract.run(spark, turns, io, 4, "v2run2") == Set.empty)
     assert(events.size == evBefore, "resume no-op must not write")
   }
 }
