@@ -52,9 +52,9 @@ object Main {
         val extracted = ResumableExtract.readOutput(spark, extractDir)
           .drop("bucket")
           .as[model.ExtractedTurn]
+        val convMeta = spark.read.parquet(s"$corpusDir/conv_meta")
         val assembled = ExtractPipeline.assembleBom(extracted,
-          spark.read.parquet(s"$corpusDir/drawings"),
-          spark.read.parquet(s"$corpusDir/conv_meta"))
+          spark.read.parquet(s"$corpusDir/drawings"), convMeta)
         val (ok, msgs) = ExtractPipeline.validationSummary(assembled)
         println(s"[assemble] validation: ok=$ok ${msgs.mkString("; ")}")
         val routed = ExtractPipeline.routed(assembled)
@@ -62,8 +62,7 @@ object Main {
           .partitionBy("row_type").parquet(s"$outDir/bom")
         ExtractPipeline.quarantined(assembled)
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/quarantine")
-        ExtractPipeline.highWaterMarks(routed,
-            spark.read.parquet(s"$corpusDir/conv_meta"))
+        ExtractPipeline.highWaterMarks(routed, convMeta)
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/hwm")
         println(s"[assemble] wrote $outDir/bom (+hwm); " +
           s"rows=${spark.read.parquet(s"$outDir/bom").count()}")

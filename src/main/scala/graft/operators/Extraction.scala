@@ -706,10 +706,12 @@ object Extraction {
     * production pipeline would NOT do (it computes assembly once and
     * fans out). The memo keeps the one-query-one-oracle contract (the
     * DataFrame definition is unchanged; only the materialized
-    * intermediate is shared) and holds at most ONE cached entry:
-    * switching (session, dir) unpersists the previous. Plain persist,
-    * not checkpoint — lineage survives, so even a released entry can
-    * recompute. */
+    * intermediate is shared) and holds at most ONE entry: assembleBom's
+    * own local checkpoint, no second copy. Switching (session, dir)
+    * frees the previous entry's blocks with BlockShim (plain
+    * `unpersist` ignores checkpoint blocks). Not registered with
+    * Fn.track: the next query's Fn.release would free blocks the
+    * sibling queries still read. */
   private val bomMemo =
     new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame)]()
 
@@ -723,11 +725,12 @@ object Extraction {
       val asm = ExtractPipeline.assembleBom(
         ExtractPipeline.extract(SqlCorpus.bomTurns(s, dir), metrics,
           partitions = 32),
-        SqlCorpus.bomDrawings(s), SqlCorpus.bomConvMeta(s, dir)).persist()
+        SqlCorpus.bomDrawings(s), SqlCorpus.bomConvMeta(s, dir))
       // the evicted entry may belong to a STOPPED session — releasing
       // it is best-effort, never a reason to fail the new query
       if (cur != null)
-        try cur._3.unpersist(false) catch { case _: Throwable => () }
+        try org.apache.spark.sql.graftshim.BlockShim.unpersist(cur._3)
+        catch { case _: Throwable => () }
       bomMemo.set((s, dir, asm))
       asm
     }

@@ -27,9 +27,10 @@ import org.apache.spark.util.LongAccumulator
   *    codegen, prunable, pushdown-friendly.
   *  - the dictionary is broadcast (tiny by construction, J1/J3); the
   *    per-conversation metadata join is a broadcast hash join; the
-  *    only wide shuffle after extraction is the per-conversation
-  *    grouping for assembly, keyed on (conv_id, pos) — bounded rows
-  *    per group (spreadsheet rows, not turns).
+  *    only wide shuffle of extracted rows is one hash exchange on
+  *    conv_id in assembly, which serves the C2 `max_by`, the J2 pivot
+  *    and the C4 window alike. Only column-label turns cross it
+  *    (spreadsheet columns, not all turns).
   */
 object ExtractPipeline {
 
@@ -167,6 +168,21 @@ object ExtractPipeline {
     * turns, match against the dictionary, classify, warn, validate,
     * number and route. Everything below is Catalyst columns.
     *
+    * The label turns are hash-partitioned on conv_id once; the C2
+    * `max_by` on (conv_id, col), the J2 pivot on (conv_id, pos) and
+    * the C4 window on conv_id all reuse that one exchange.
+    *
+    * Materializes EAGERLY: the result is `localCheckpoint`ed before
+    * it returns, so the assembly runs once and every consumer
+    * ([[validationSummary]], [[routed]], [[quarantined]],
+    * [[highWaterMarks]]) scans the checkpointed rows. The blocks live
+    * until the returned frame becomes unreachable, when Spark's
+    * ContextCleaner frees them (or until `graftshim.BlockShim.unpersist`
+    * does). Trade-off: a checkpoint drops lineage, so losing an
+    * executor that holds blocks fails the consumers instead of
+    * recomputing them; the recovery is to rerun the assemble, which
+    * overwrites its outputs.
+    *
     * @param extracted  output of [[extract]]
     * @param drawings   dictionary relation (project, part_number,
     *                   drawing_link); broadcast after aggregation
@@ -203,10 +219,11 @@ object ExtractPipeline {
     // column's tail; first() would be partition-order-dependent).
     val latestPerLabel = extracted.toDF()
       .filter($"col".isin(labels: _*))
+      .repartition($"conv_id")
       .groupBy($"conv_id", $"col")
       .agg(max_by($"cells", $"turn_idx").as("cells"))
     // J2 positional zip: explode each column's cells, pivot on label.
-    // One shuffle keyed (conv_id, pos); group size = #labels.
+    // Group size = #labels; no shuffle of its own (conv_id-partitioned).
     val cols = latestPerLabel
       .select($"conv_id", $"col", posexplode($"cells").as(Seq("pos", "cell")))
     val pivoted = cols.groupBy($"conv_id", $"pos")
@@ -228,8 +245,7 @@ object ExtractPipeline {
       .join(broadcast(convMeta), Seq("conv_id"), "left")
       .join(broadcast(dict), Seq("project", "part_number"), "left")
 
-    // C1 manual-match guard input: joined on the same (conv_id,
-    // row_idx) key the assembly shuffle already uses
+    // C1 manual-match guard input, joined on (conv_id, row_idx)
     val staged = manualMatches match {
       case Some(mm) => stagedBase.join(
         mm.select($"conv_id", $"row_idx",
@@ -301,6 +317,7 @@ object ExtractPipeline {
         trim($"mat".getField("text")).as("material"),
         $"ocr_warning", $"needs_review", $"similarity",
         $"missing", $"invalid_qty", $"emit")
+      .localCheckpoint(eager = true)
   }
 
   /** C4 gate: job-level validation summary (messages replicate the
@@ -363,11 +380,15 @@ object ExtractPipeline {
         col("matched"), col("quantity"), col("missing"),
         col("invalid_qty"), col("ocr_warning"))
 
-  /** A4/K5: per-conversation new high-water mark. */
+  /** A4/K5: per-conversation new high-water mark, one row per
+    * `convMeta` conversation. The per-conversation maxima are the
+    * broadcast (build) side of a left join; they never outnumber the
+    * `convMeta` rows. (Spark cannot build the right side of a right
+    * outer join, so a broadcast hint there is dropped.) */
   def highWaterMarks(routedRows: DataFrame, convMeta: DataFrame): DataFrame =
-    routedRows.groupBy("conv_id")
-      .agg(max("item_number").as("emitted_max"))
-      .join(broadcast(convMeta.select(col("conv_id"), col("last_item"))), Seq("conv_id"), "right")
+    convMeta.select(col("conv_id"), col("last_item"))
+      .join(broadcast(routedRows.groupBy("conv_id")
+        .agg(max("item_number").as("emitted_max"))), Seq("conv_id"), "left")
       .select(col("conv_id"),
         greatest(coalesce(col("emitted_max"), lit(0L)), col("last_item")).as("last_item"))
 }

@@ -184,6 +184,21 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("assembleBom materializes once: routed and quarantined scan its checkpoint") {
+    import spark.implicits._
+    val assembled = ExtractPipeline.assembleBom(
+      ExtractPipeline.extract(spark.createDataset(corpus.turns), new ExtractPipeline.Metrics(spark)),
+      spark.createDataset(corpus.drawings).toDF(),
+      spark.createDataset(corpus.convMeta).toDF())
+    for ((name, df) <- Seq("routed" -> ExtractPipeline.routed(assembled),
+        "quarantined" -> ExtractPipeline.quarantined(assembled))) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("Scan ExistingRDD"), s"$name does not read the checkpoint:\n$p")
+      assert(!p.contains("Exchange"), s"$name re-shuffles:\n$p")
+      assert(!p.contains("MapPartitions"), s"$name re-runs the kernel:\n$p")
+    }
+  }
+
   test("salted repartition spreads one giant conversation across all partitions") {
     import spark.implicits._
     // one conversation dominating the input — the heavy-tail case the

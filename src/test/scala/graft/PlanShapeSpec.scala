@@ -1,7 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.pipeline.ExtractPipeline
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan regression guards: the scale properties the queries
   * were DESIGNED around must survive refactors, not just their
@@ -9,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to a cartesian product or a sort-based aggregate — the r1 verdict
   * flagged exactly such shapes; these assertions keep them fixed.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -501,13 +509,82 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("BOM assembly memo: the sibling queries read the cached stage, not the chain") {
     // first query materializes the shared assembled frame; every
-    // sibling must plan an in-memory scan of it instead of re-running
-    // corpus-gen -> kernel -> assembly (the production once-and-fan-out
-    // shape; saved ~11 s/round in the driver bench)
+    // sibling must plan a scan of assembleBom's local checkpoint
+    // instead of re-running corpus-gen -> kernel -> assembly (the
+    // production once-and-fan-out shape; saved ~11 s/round in the
+    // driver bench)
     SparkEntry.queries("x_bom_pipeline")(spark, sfDir).count()
     val p = plan("x_bom_rows")
-    assert(p.contains("InMemoryTableScan"),
-      "x_bom_rows did not reuse the memoized assembled stage:\n" +
-        p.linesIterator.take(8).mkString("\n"))
+    val head = p.linesIterator.take(12).mkString("\n")
+    assert(p.contains("Scan ExistingRDD"),
+      s"x_bom_rows did not reuse the memoized assembled stage:\n$head")
+    assert(!p.contains("MapPartitions"), s"x_bom_rows re-runs the kernel:\n$head")
+    assert(!p.contains("FileScan"), s"x_bom_rows re-reads the corpus:\n$head")
+  }
+
+  /** Hash keys of every shuffle exchange in the plan that
+    * `assembleBom`'s eager `localCheckpoint` executed. */
+  private def assemblyExchangeKeys(manual: Option[DataFrame]): Seq[Seq[String]] = {
+    import spark.implicits._
+    val corpus = graft.gen.TranscriptGen.corpus(nConvs = 40)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractPipeline.assembleBom(
+        ExtractPipeline.extract(spark.createDataset(corpus.turns),
+          new ExtractPipeline.Metrics(spark)),
+        spark.createDataset(corpus.drawings).toDF(),
+        spark.createDataset(corpus.convMeta).toDF(), manual)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_._1 == "localCheckpoint") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val ckpt = plans.asScala.collectFirst { case ("localCheckpoint", p) => p }
+      .getOrElse(fail(s"no localCheckpoint execution among ${plans.asScala.map(_._1)}"))
+    collect(ckpt) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning =>
+        h.expressions.map { case a: AttributeReference => a.name; case e => e.sql }
+      }.sortBy(_.mkString(","))
+  }
+
+  test("assembleBom plans one conv_id exchange for C2, J2 and C4") {
+    // the spreadsheet path: ONE exchange keyed on conv_id alone; the
+    // other is the dictionary aggregate's (project, part_number)
+    val keys = assemblyExchangeKeys(None)
+    assert(keys == Seq(Seq("conv_id"), Seq("project", "part_number")), keys)
+  }
+
+  test("assembleBom's manual-match shuffle join plans at most five exchanges") {
+    import spark.implicits._
+    // size-based broadcasting off, so the manual matches shuffle-join:
+    // conv_id, (conv_id, row_idx) on both join sides, conv_id again
+    // for the C4 window, and the dictionary's — five in all
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val manual = Seq(("conv-000000", 0, "HAND-SET", "BO"))
+        .toDF("conv_id", "row_idx", "matched", "row_type")
+      val keys = assemblyExchangeKeys(Some(manual))
+      assert(keys.size <= 5, keys)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("highWaterMarks broadcasts the per-conversation maxima (no shuffle join)") {
+    import spark.implicits._
+    // size-based broadcasting off: only the explicit hint may broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val routed = Seq(("c1", 3L), ("c1", 4L), ("c2", 5L)).toDF("conv_id", "item_number")
+      val meta = Seq(("c1", 1L), ("c3", 2L)).toDF("conv_id", "last_item")
+      val p = ExtractPipeline.highWaterMarks(routed, meta)
+        .queryExecution.executedPlan.toString
+      assert(p.contains("BroadcastHashJoin"), p)
+      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }
