@@ -114,17 +114,6 @@ object OcrField {
   val empty: OcrField = OcrField("", 0.0, ocr = false)
 }
 
-/** One assembled BOM spreadsheet row before classification
-  * (reference columns: frontend/index.html:1117-1124). */
-final case class BomRowRaw(
-    conv_id: String,
-    row_idx: Int,
-    part: OcrField,
-    qty: OcrField,
-    desc: OcrField,
-    mat: OcrField
-)
-
 /** A classified, validated, numbered BOM row — the engine's sink record
   * (reference payload shapes: frontend/index.html:2343-2361). */
 final case class BomRow(
@@ -149,16 +138,3 @@ final case class Drawing(
     drawing_link: String
 )
 
-/** Per-partition lineage/checkpoint row — the reference's scalar
-  * high-water mark (backend/main.py:607-636) generalized to
-  * resumable per-partition rows (SURVEY §4.3). */
-final case class LineageRow(
-    run_id: String,
-    partition_id: Int,
-    conv_min: String,
-    conv_max: String,
-    turns_done: Long,
-    cells_emitted: Long,
-    boxes_dropped: Long,
-    completed_at: Timestamp
-)

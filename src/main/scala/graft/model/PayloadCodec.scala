@@ -37,18 +37,14 @@ object PayloadCodec {
     if (json == null || json.isEmpty || json.charAt(0) != '{') return empty
     try new FastScan(json).parse()
     catch {
-      case FastScan.Bail =>
-        val p = factory.createParser(json)
-        try decodeObject(p)
-        catch { case _: Exception => empty }
-        finally p.close()
+      case FastScan.Bail => jackson(json)
       case _: Exception => empty
     }
   }
 
-  /** Jackson-only decode (used by tests to cross-check FastScan). */
-  def decodeJackson(json: String): Payload = {
-    if (json == null || json.isEmpty || json.charAt(0) != '{') return empty
+  /** The jackson streaming decode of a `{`-led payload: [[decode]]'s
+    * fallback for anything the scanner rejects. */
+  private[graft] def jackson(json: String): Payload = {
     val p = factory.createParser(json)
     try decodeObject(p)
     catch { case _: Exception => empty }

@@ -44,25 +44,20 @@ object Dedup {
     * standard at-scale formulation. */
   private val MaxShingleDf = 32
 
-  /** Corpus-size ceiling for force-broadcasting the hot-shingle set.
-    * The number of shingle TYPES with df > cap GROWS with the corpus
-    * (Zipf tail) — on a real crawl it is 10⁸+, and an unconditional
-    * `broadcast()` hint bypasses Spark's size checks and OOMs the
-    * executors (the r5 verdict's one scale-killer). Below the ceiling
-    * the hot set is provably small (≤ docs·shingles/cap types can
-    * exceed the cap) and the broadcast saves shuffling the corpus-
-    * sized shingle table for the anti-join; above it the hint is
-    * dropped and the planner/AQE pick the strategy from the measured
-    * size (the anti-join stays a plain equi-join either way). Same
-    * two-leg footer-statistic pattern as
-    * [[Relational.BestMatchBroadcastMaxRows]]. */
-  private[graft] val HotBroadcastMaxDocs: Long = 2L * 1000 * 1000
-
-  private def shingled(s: SparkSession, dir: String): DataFrame =
-    shingled(s, dir, HotBroadcastMaxDocs)
-
-  private[graft] def shingled(s: SparkSession, dir: String,
-      hotBroadcastMaxDocs: Long): DataFrame = {
+  /** The corpus shingle table with the df-capped (hot) shingles
+    * removed by a left-anti join. The hot set is hinted to broadcast
+    * only when [[Fn.broadcastable]] admits its byte bound: each text
+    * byte lands in at most three shingles, and a hot shingle occurs
+    * more than MaxShingleDf times, so the hot types hold at most
+    * 3·T / (MaxShingleDf + 1) bytes, T = the footer bytes of
+    * `documents.text`. The hot type count grows with the corpus (Zipf
+    * tail; 10⁸+ on a real crawl), and a `broadcast()` hint bypasses
+    * Spark's own size checks, so an unguarded hint OOMs executors;
+    * without the hint the planner/AQE pick the join from measured
+    * sizes. A dictionary-encoded chunk counts a repeated text once, so
+    * exact duplicates can lift the hot set above the bound, to at most
+    * 3·T. */
+  private[graft] def shingled(s: SparkSession, dir: String): DataFrame = {
     // cached: BOTH the df aggregate and the anti-join's probe side
     // consume the exploded shingle table — uncached, the whole
     // scan→tokenize→shingle chain executes twice (Spark does not
@@ -77,10 +72,9 @@ object Dedup {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > MaxShingleDf)
       .select(col("sh"))
-    val hotSized =
-      if (Fn.rowCountStat(s, dir, "documents") <= hotBroadcastMaxDocs)
-        broadcast(hot)
-      else hot
+    val hotBytes =
+      3 * Fn.colBytesStat(s, dir, "documents", "text") / (MaxShingleDf + 1)
+    val hotSized = if (Fn.broadcastable(s, hotBytes)) broadcast(hot) else hot
     sh.join(hotSized, Seq("sh"), "left_anti")
   }
 
@@ -175,8 +169,8 @@ object Dedup {
     * neighbors, small-star collapses the smaller side), so path
     * lengths halve geometrically and the edge set converges to stars
     * rooted at each component's min id in O(log n) rounds — where
-    * min-label propagation (kept below as [[minLabelComponents]], the
-    * test cross-check) needs O(diameter) rounds. The iteration runs on
+    * min-label propagation (ClusterAsofSpec's cross-check) needs
+    * O(diameter) rounds. The iteration runs on
     * the EDGE table only (candidate pairs ≪ corpus); each round is two
     * edge-sized hash-agg shuffles + two edge-sized joins, and the
     * driver only ever sees one-row convergence aggregates, never data
@@ -207,95 +201,91 @@ object Dedup {
 
   private[graft] final case class CcResult(labels: DataFrame, rounds: Int)
 
-  /** Edge-count ceiling for the DRIVER union-find leg of [[contract]]:
-    * 2²² edges ≈ 64 MB of (u, v) longs — trivially collectable. The
-    * candidate-pair table is ≪ corpus by construction (LSH bands +
-    * the df cap), but it is not BOUNDED, so the collect only fires
-    * under this guard; above it the distributed star-contraction loop
-    * runs unchanged. Connected-component labels are UNIQUE (component
-    * min id), so the two legs are provably equivalent — pinned by the
-    * ClusterAsofSpec leg-agreement test — and the driver leg replaces
-    * the per-round shuffle/checkpoint jobs (4-6 Spark jobs × O(log n)
-    * rounds) with one collect + one parallelize. Same size-adaptive
-    * two-leg discipline as [[Relational.bestMatch]]. */
-  private[graft] val CcDriverMaxEdges: Long = 1L << 22
+  /** Driver heap one canonical pair costs [[contractOnDriver]], in
+    * bytes: the worst of four measurements, 421, rounded up. Measured
+    * as the smallest `-Xmx` (8 MB steps; G1, JDK 17, local[2], so the
+    * executor side shares the heap) in which the leg completes on
+    * pairs that each bring two new ids, the worst case, less the 62 MB
+    * a 1,024-pair run needs: 302, 421, 297 and 356 B per pair at
+    * 2²⁰, 1,677,721, 2²¹ and 3·2²⁰ pairs. It pays for the collect
+    * (Spark's decoded rows next to the boxed (u, v) tuples), the
+    * union-find's sorted id and parent arrays, the per-vertex label
+    * tuples shipped back through `parallelize`, and buffer growth,
+    * which makes it uneven across sizes. */
+  private[graft] val CcDriverBytesPerEdge: Long = 448L
 
-  /** [[contract]]'s driver leg: local union-find with the component
-    * MIN as every root (union always attaches the larger root under
-    * the smaller), so labels equal the distributed contraction's.
-    * `edges` must be the deduped (u > v) list, bounded by the caller's
-    * guard; `verts` the full vertex set (self-loop vertices included,
-    * labeling themselves). The edges/vertices cache blocks stay
-    * registered with the release registry — the lifetime every other
-    * query-scoped block has. */
-  private def ccDriverLeg(spark: SparkSession, edges: DataFrame,
-      verts: Array[Long]): CcResult = {
-    val local = edges.select(col("u"), col("v")).collect()
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
+  /** Canonical pair set of a (`doc_a`, `doc_b`) pair list: (u, v) with
+    * u ≥ v, deduped and cached — the input both legs of [[contract]]
+    * take. Self-loops stay, so a vertex whose only pair is a self-loop
+    * still gets a label. */
+  private[graft] def canonical(pairs: DataFrame): DataFrame =
+    track(pairs
+      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
+        least(col("doc_a"), col("doc_b")).as("v"))
+      .distinct().cache())
+
+  /** The contraction behind [[connectedComponents]]: per-vertex
+    * (doc_id, lab). Connected-component labels are UNIQUE (component
+    * min id), so its two legs are equivalent (the ClusterAsofSpec
+    * leg-agreement test pins it). When the pairs fit the driver
+    * ([[Fn.collectable]] of the pair count × [[CcDriverBytesPerEdge]],
+    * the measured per-pair cost), one collect and a local union-find
+    * replace the distributed loop's 4-6 jobs × O(log n) rounds. The
+    * candidate pair table is ≪ corpus by construction (LSH bands + the
+    * df cap), but not BOUNDED, so the size check stays. */
+  private[graft] def contract(pairs: DataFrame): CcResult = {
+    val canon = canonical(pairs)
+    if (Fn.collectable(canon.count() * CcDriverBytesPerEdge)) {
+      import pairs.sparkSession.implicits._
+      contractOnDriver(pairs.sparkSession, canon.as[(Long, Long)].collect())
+    } else contractDistributed(canon)
+  }
+
+  /** [[contract]]'s driver leg: local union-find over the collected
+    * canonical pairs. Vertex ids are sorted, so a vertex's index order
+    * is its id order; union keeps the smaller root, so every root is
+    * its component's MIN id — the distributed leg's label contract.
+    * Self-loop pairs add their vertex and no union. */
+  private[graft] def contractOnDriver(spark: SparkSession,
+      pairs: Array[(Long, Long)]): CcResult = {
+    val ids = new Array[Long](2 * pairs.length)
+    var i = 0
+    while (i < pairs.length) {
+      ids(2 * i) = pairs(i)._1; ids(2 * i + 1) = pairs(i)._2; i += 1
+    }
+    java.util.Arrays.sort(ids)
+    var n = 0 // dedupe in place
+    for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
       var r = x
-      var p = parent.getOrDefault(r, r)
-      while (p != r) { r = p; p = parent.getOrDefault(r, r) }
-      // path compression
-      var c = x
-      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      // path halving
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    local.foreach { row =>
-      val (a, b) = (row.getLong(0), row.getLong(1))
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
-        // min id becomes the root, so the final root IS the component
-        // minimum — the label contract of the distributed leg
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
+    pairs.foreach { p =>
+      val (ra, rb) = (find(at(p._1)), find(at(p._2)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    val out = verts.map(v => (v, find(v))).toSeq
+    val out = Array.tabulate(n)(v => (ids(v), ids(find(v))))
     import spark.implicits._
     val labels = spark.sparkContext
-      .parallelize(out, math.max(1, spark.sparkContext.defaultParallelism / 4))
+      .parallelize(scala.collection.immutable.ArraySeq.unsafeWrapArray(out),
+        math.max(1, spark.sparkContext.defaultParallelism / 4))
       .toDF("doc_id", "lab")
     CcResult(track(labels), 0)
   }
 
-  /** The contraction loop behind [[connectedComponents]]; exposed so
-    * tests can assert the round count stays logarithmic on deep
-    * chains (pass `driverMaxEdges = 0` to pin the distributed leg).
-    * Returns per-vertex (doc_id, lab). */
-  private[graft] def contract(pairs: DataFrame,
-      driverMaxEdges: Long = CcDriverMaxEdges): CcResult = {
-    // canonical directed edge list u > v, self-loops dropped,
-    // materialized once (the candidate-generator pipeline above is
-    // NOT recomputed per round). CACHED, not eagerly checkpointed:
-    // the driver leg never needs truncated lineage, and an eager
-    // localCheckpoint is an extra materialization job — the
-    // distributed leg converts to a checkpoint below.
-    val edges0 = track(pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-        least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .cache())
-    var edgeCount = edges0.count()
-    if (edgeCount <= driverMaxEdges) {
-      // ── driver leg: the edge set fits the guard, so resolve the
-      // components with a local union-find (min id as root) and ship
-      // the labels back as one parallelized table. Both collects are
-      // BOUNDED: edges by the guard, vertices by the limit() below
-      // (2·edges + slack covers every self-loop-free input; a
-      // self-loop-heavy graph that overflows the limit falls through
-      // to the distributed leg).
-      val spark = pairs.sparkSession
-      val vcap = 2 * driverMaxEdges + 1024
-      val lim = math.min(vcap + 1, Int.MaxValue.toLong).toInt
-      val verts = pairs.select(col("doc_a").as("doc_id"))
-        .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-        .limit(lim).collect().map(_.getLong(0))
-      if (verts.length <= vcap) return ccDriverLeg(spark, edges0, verts)
-    }
-    // distributed leg: per-round lineage truncation starts here
-    var edges = track(edges0.localCheckpoint(true))
-    val vertices = track(pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+  /** [[contract]]'s distributed leg over [[canonical]] pairs:
+    * large-star / small-star rounds on the edge table. Tests call it
+    * directly to pin this leg. */
+  private[graft] def contractDistributed(canon: DataFrame): CcResult = {
+    // per-round lineage truncation starts here
+    var edges = track(canon.filter(col("u") =!= col("v")).localCheckpoint(true))
+    var edgeCount = edges.count()
+    val vertices = track(canon.select(col("u").as("doc_id"))
+      .union(canon.select(col("v").as("doc_id"))).distinct()
       .localCheckpoint(true))
     var rounds = 0
     var converged = edgeCount == 0L
@@ -350,35 +340,6 @@ object Dedup {
       .localCheckpoint(true))
     org.apache.spark.sql.graftshim.BlockShim.unpersist(edges)
     CcResult(labels, rounds)
-  }
-
-  /** Min-label propagation — the O(diameter)-round classic, kept as an
-    * independently-coded cross-check for the contraction engine (the
-    * two must agree on every graph; ClusterAsofSpec asserts it on
-    * randomized inputs). Convergence is detected by COUNTING labels
-    * that changed this round (overflow-proof), not a sum probe.
-    * Returns per-vertex (doc_id, lab). */
-  private[graft] def minLabelComponents(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("doc_id"), col("doc_b").as("nbr"))
-      .union(pairs.select(col("doc_b").as("doc_id"), col("doc_a").as("nbr")))
-      .localCheckpoint(true)
-    var lab = edges.groupBy(col("doc_id"))
-      .agg(least(min(col("nbr")), col("doc_id")).as("lab"))
-      .localCheckpoint(true)
-    var changed = 1L
-    while (changed != 0L) {
-      val prop = edges.join(lab, Seq("doc_id"))
-        .select(col("nbr").as("doc_id"), col("lab"))
-      val next = lab.union(prop).groupBy(col("doc_id"))
-        .agg(min(col("lab")).as("lab"))
-        .localCheckpoint(true)
-      changed = next.join(lab.withColumnRenamed("lab", "old"), Seq("doc_id"))
-        .filter(col("lab") =!= col("old")).limit(1).count()
-      org.apache.spark.sql.graftshim.BlockShim.unpersist(lab)
-      lab = next
-    }
-    org.apache.spark.sql.graftshim.BlockShim.unpersist(edges)
-    track(lab)
   }
 
   /** CTE chain mirroring [[lshCandidatePairs]]; append after
@@ -757,13 +718,9 @@ object Dedup {
     //    SimHash, while d1's raw digest misses it. That is exactly
     //    the class SimHash exists for: reorder/repeat-invariant
     //    duplication that exact dedup cannot see. ───────────────────
-    // GRAFT_DOC_N is a BENCH/PRODUCTION override (skip the footer read
-    // when the caller already knows n); never set it during an oracle
-    // verification run — the DuckDB twin always recomputes count(*).
     ("d9_simhash_neardup", (s: SparkSession, dir: String) =>
       simhashNeardup(s, dir,
-        bandBitsFor(sys.env.get("GRAFT_DOC_N").map(_.toLong)
-          .getOrElse(Fn.rowCountStat(s, dir, "documents")))): DataFrame, Some(s"""
+        bandBitsFor(Fn.rowCountStat(s, dir, "documents"))): DataFrame, Some(s"""
       WITH wv AS (
         SELECT CAST(least(32, greatest(16, ceil(log2(count(*))))) AS INT) AS w
         FROM documents),

@@ -36,38 +36,28 @@ object Extraction {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def nConvs: Int =
-    sys.env.getOrElse("GRAFT_XCONVS", "120").toInt
+  /** Conversations in the synthetic corpus. */
+  private val NConvs = 120
 
   /** Distributed corpus generation (the WriteCorpus.write pattern):
     * each conversation is seeded independently, so executors generate
     * their id-ranges in place — nothing materializes on the driver and
     * no multi-MB task closures ship (the r2 `createDataset(corpus)`
     * form logged `task of very large size (3576 KiB)` warnings). Only
-    * the handful of edge-case turns and the tiny dimension tables are
-    * driver-side. */
+    * the handful of edge-case turns are driver-side. */
   private def corpusDs(s: SparkSession) = {
     import s.implicits._
-    val n = nConvs
-    val edge = TranscriptGen.edgeCaseTurns()
-    val turns = s.range(n.toLong)
+    s.range(NConvs.toLong)
       .repartition(math.max(32, s.sparkContext.defaultParallelism))
       .as[Long]
       .mapPartitions(_.flatMap(c => TranscriptGen.convTurns(c.toInt)._1))
-      .unionByName(s.createDataset(edge))
-    val meta = (0 until n).map(TranscriptGen.convMeta) ++
-      edge.map(_.conv_id).distinct
-        .map(cid => TranscriptGen.ConvMeta(cid, "projE", "partE", 0L))
-    (turns,
-      s.createDataset(TranscriptGen.drawingsDict()).toDF(),
-      s.createDataset(meta).toDF())
+      .unionByName(s.createDataset(TranscriptGen.edgeCaseTurns()))
   }
 
   /** Flagship: full per-turn extraction over the synthetic corpus. */
   def extractAll(s: SparkSession): DataFrame = {
-    val (turns, _, _) = corpusDs(s)
     val metrics = new ExtractPipeline.Metrics(s)
-    ExtractPipeline.extract(turns, metrics, partitions = 32)
+    ExtractPipeline.extract(corpusDs(s), metrics, partitions = 32)
       .toDF()
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"),
         col("extracted_text"), col("n_boxes"), col("n_cells"))

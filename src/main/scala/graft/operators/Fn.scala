@@ -1,7 +1,12 @@
 package graft.operators
 
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Shared Catalyst column helpers for the operator library. Everything
   * here is pure `functions._` composition (whole-stage codegen; no
@@ -63,78 +68,60 @@ object Fn {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Table row count from parquet FOOTERS — a metadata read, O(files),
-    * never a scan. This is the "table statistic" path: parquet keeps
-    * the row count per row group in the footer (Iceberg lifts the same
-    * number into the snapshot manifest, one metadata read on a
-    * cluster). Queries whose STRUCTURE depends on corpus size (the
-    * ann_lsh_topk plane count) must size themselves from this, not
-    * from a `.count()` — at 100 TB an extra counting pass doubles the
-    * query's scan cost. */
-  def rowCountStat(spark: SparkSession, dir: String, name: String): Long = {
+  /** Every row group's footer metadata of table `name` — a metadata
+    * read, O(files), never a scan (Iceberg lifts the same numbers into
+    * its manifests, one metadata read on a cluster). The footer
+    * statistics below all walk it lazily, one file open at a time. */
+  private def rowGroups(spark: SparkSession, dir: String,
+      name: String): Iterator[BlockMetaData] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try n += r.getRecordCount finally r.close()
+    val files = root.getFileSystem(conf).listFiles(root, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getFooter.getBlocks.asScala finally r.close()
       }
-    }
-    n
   }
 
-  /** Max of a LONG column from parquet FOOTER statistics — a metadata
-    * read, O(files), never a scan (the column-stats sibling of
-    * [[rowCountStat]]; Iceberg lifts the same bound into manifest
-    * metrics). Falls back to a scan aggregate only when some footer
-    * lacks the statistic. */
+  /** `column`'s chunk in every row group of table `name`. */
+  private def columnChunks(spark: SparkSession, dir: String, name: String,
+      column: String): Iterator[ColumnChunkMetaData] =
+    rowGroups(spark, dir, name).map(_.getColumns.asScala
+      .find(_.getPath.toDotString == column)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$name has a row group without column $column")))
+
+  /** Table row count from parquet FOOTERS. Queries whose STRUCTURE
+    * depends on corpus size (the ann_lsh_topk plane count) size
+    * themselves from this, not from a `.count()` — at 100 TB an extra
+    * counting pass doubles the query's scan cost. */
+  def rowCountStat(spark: SparkSession, dir: String, name: String): Long =
+    rowGroups(spark, dir, name).map(_.getRowCount).sum
+
+  /** Uncompressed bytes of one column from parquet FOOTERS — the size
+    * estimate [[broadcastable]] takes. A dictionary-encoded chunk
+    * counts each distinct value once. */
+  def colBytesStat(spark: SparkSession, dir: String, name: String,
+      column: String): Long =
+    columnChunks(spark, dir, name, column).map(_.getTotalUncompressedSize).sum
+
+  /** Max of a LONG column from parquet FOOTER statistics. Falls back
+    * to a scan aggregate only when some footer lacks the statistic. */
   def colMaxStat(spark: SparkSession, dir: String, name: String,
                  column: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, true)
     var max = Long.MinValue
-    var complete = true
-    while (it.hasNext && complete) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try {
-          val blocks = r.getFooter.getBlocks
-          var b = 0
-          while (b < blocks.size() && complete) {
-            val cols = blocks.get(b).getColumns
-            var c = 0
-            var found = false
-            while (c < cols.size() && !found) {
-              val cc = cols.get(c)
-              if (cc.getPath.toDotString == column) {
-                found = true
-                val st = cc.getStatistics
-                if (st == null || !st.hasNonNullValue) complete = false
-                else st.genericGetMax match {
-                  // parquet stores INT64 stats as Long and INT32 as
-                  // Integer — accept both integer widths so an int32
-                  // id column doesn't silently force the scan fallback
-                  case l: java.lang.Long    => if (l > max) max = l
-                  case i: java.lang.Integer => if (i.longValue > max) max = i.longValue
-                  case _                    => complete = false
-                }
-              }
-              c += 1
-            }
-            if (!found) complete = false
-            b += 1
-          }
-        } finally r.close()
-      }
+    val complete = columnChunks(spark, dir, name, column).forall { c =>
+      val st: Statistics[_] = c.getStatistics
+      st != null && st.hasNonNullValue && (st.genericGetMax match {
+        // parquet stores INT64 stats as Long and INT32 as Integer —
+        // accept both integer widths so an int32 id column doesn't
+        // silently force the scan fallback
+        case l: java.lang.Long    => max = math.max(max, l); true
+        case i: java.lang.Integer => max = math.max(max, i.longValue); true
+        case _                    => false
+      })
     }
     if (complete && max != Long.MinValue) max
     else {
@@ -151,6 +138,32 @@ object Fn {
       row.getLong(0)
     }
   }
+
+  /** The size policy behind every two-leg operator decision (broadcast
+    * or driver leg vs distributed leg): sites estimate their small
+    * side in BYTES and ask one of these two questions.
+    *
+    * `broadcastable`: may `bytes` ride a broadcast? Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold`, parsed by Spark; a
+    * threshold ≤ 0 turns broadcasting off, as it does for the planner. */
+  def broadcastable(spark: SparkSession, bytes: Long): Boolean = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    threshold > 0 && bytes >= 0 && bytes <= threshold
+  }
+
+  /** Share of the driver's max heap one driver-side leg may fill. The
+    * rest is not the leg's to take: the driver also holds broadcast
+    * builds (up to the broadcast threshold each), task results and
+    * plans of the same job, and a heap kept mostly live makes every
+    * collection a full one. A quarter leaves three quarters for those. */
+  private[graft] val DriverHeapShare = 0.25
+
+  /** `collectable`: do `bytes` of driver-side working set fit the
+    * driver? `maxHeap` is the driver JVM's (`Runtime.maxMemory`, this
+    * JVM is the driver); tests pass a fixed heap. */
+  def collectable(bytes: Long,
+      maxHeap: Long = Runtime.getRuntime.maxMemory): Boolean =
+    bytes >= 0 && bytes <= (maxHeap * DriverHeapShare).toLong
 
   /** Global 0-based index in `order`-ascending order, WITHOUT an
     * unpartitioned window (which funnels every row through one task —

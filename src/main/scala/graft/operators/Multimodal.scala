@@ -30,7 +30,6 @@ object Multimodal {
 
   /** Typed media metadata carried next to the binary payload. */
   final case class MediaMeta(width: Int, height: Int, sample_rate: Int, format: String)
-  final case class MediaRow(doc_id: Long, kind: String, bytes: Array[Byte], meta: MediaMeta)
   final case class MediaFeatures(doc_id: Long, kind: String, n_bytes: Int,
                                  feature: Array[Float])
 

@@ -419,18 +419,18 @@ object Relational {
       FROM sessions GROUP BY user_id, sid""")),
 
     // ── J1+C1: scored top-1 lookup join + classification. The join
-    //    strategy is picked from the dictionary's parquet-footer row
-    //    count (a metadata read, never a sizing scan): the driver's
-    //    supplier dictionary is small, so this plans the broadcast
-    //    leg; [[bestMatch]] carries the shuffle leg a 10⁷-entry
-    //    dictionary needs, pinned by plan tests at both sizes. ───────
+    //    strategy is picked from the dictionary's parquet-footer bytes
+    //    (a metadata read, never a sizing scan): the driver's supplier
+    //    dictionary is small, so this plans the broadcast leg;
+    //    [[bestMatch]] carries the shuffle leg a 10⁷-entry dictionary
+    //    needs, pinned by plan tests at both sizes. ─────────────────
     ("j1_best_match", (s: SparkSession, dir: String) => {
       val q = upper(trim(regexp_replace(col("c_name"), "Customer", "Supplier")))
         .substr(lit(1), lit(9) + (col("c_custkey") % 10).cast("int"))
       val cust = Fn.spread(s, dir, "customer")
         .select(col("c_custkey").as("qid"), q.as("q"))
       val dict = Fn.table(s, dir, "supplier").select(col("s_name"))
-      bestMatch(cust, dict, Fn.rowCountStat(s, dir, "supplier"),
+      bestMatch(cust, dict, Fn.colBytesStat(s, dir, "supplier", "s_name"),
           minQLen = 9, maxQLen = 18)
         .withColumnRenamed("qid", "c_custkey")
     }: DataFrame, Some("""
@@ -749,12 +749,6 @@ object Relational {
       )"""))
   )
 
-  /** Default broadcast ceiling for [[bestMatch]], in dictionary ROWS:
-    * ~2M names ≈ 60 MB serialized — about the practical per-executor
-    * broadcast budget. Beyond it the dictionary must shuffle, not ride
-    * every task. */
-  val BestMatchBroadcastMaxRows: Long = 2L * 1000 * 1000
-
   /** Scored best-match lookup (J1+C1) at BOTH dictionary scales.
     *
     * Scoring (reference: frontend/index.html:1815 strict `> 0.85`
@@ -768,16 +762,16 @@ object Relational {
     * index is the two-level [[Fn.orderedIndex]] — parallel even at
     * 10⁷ entries; index order IS the tie-break.
     *
-    * Two legs, chosen by `dictRows` — a parquet-footer / manifest
-    * statistic, never a counting scan:
+    * Two legs, chosen by `dictBytes` — a parquet-footer / manifest
+    * statistic, never a sizing scan — through [[Fn.broadcastable]]:
     *
-    *  - '''broadcast''' (`dictRows <= broadcastMaxRows`): broadcast
+    *  - '''broadcast''' (`dictBytes` broadcastable): broadcast
     *    nested-loop scored join; every (query, entry) pair is scored
     *    and the partial agg collapses them before any exchange. Right
     *    up to ~10⁶ entries. (The per-element HOF argmax in the BOM
     *    pipeline is right for ~10-entry dictionaries; at 1000 × 15k
     *    the interpreted lambda was 84 s — this form ~1.5 s.)
-    *  - '''shuffle''' (above the ceiling): a 10⁷-entry dictionary is
+    *  - '''shuffle''' (otherwise): a 10⁷-entry dictionary is
     *    hundreds of MB serialized — broadcasting it OOMs executors.
     *    Instead the dictionary explodes into an INVERTED SUBSTRING
     *    INDEX: every distinct substring of each (canonicalized) entry
@@ -804,8 +798,7 @@ object Relational {
     * @return (qid, q, matched, row_type, rating)
     */
   private[graft] def bestMatch(queries: DataFrame, dict: DataFrame,
-      dictRows: Long, minQLen: Int, maxQLen: Int,
-      broadcastMaxRows: Long = BestMatchBroadcastMaxRows): DataFrame = {
+      dictBytes: Long, minQLen: Int, maxQLen: Int): DataFrame = {
     require(minQLen >= 1 && maxQLen >= minQLen,
       s"bestMatch: bad query-length domain [$minQLen, $maxQLen]")
     // cached: the scoring join's dictionary side and the idx→name
@@ -830,7 +823,7 @@ object Relational {
         when(col("b") === 0, 1.0).when(col("b") === 1, 0.99)
           .when(col("b") === 2, 0.85).otherwise(0.0).as("rating"))
 
-    if (dictRows <= broadcastMaxRows) {
+    if (Fn.broadcastable(queries.sparkSession, dictBytes)) {
       // broadcast leg: all pairs scored (tier-3 rows included, so the
       // agg itself yields exactly one row per query — no stitch join)
       queries.join(broadcast(dictDf.select(col("cu"), col("idx"))))

@@ -268,21 +268,6 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), col("cos"))
   }
 
-  /** All-pairs exact near-dup — O(N²), TEST ORACLE ONLY (recall
-    * measurement in SimilaritySpec); not a SparkEntry query. */
-  def allPairsNeardup(s: SparkSession, dir: String, threshold: Double = 0.3): DataFrame = {
-    val emb = Fn.spread(s, dir, "embeddings")
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("norm", normCol(col("e")))
-    val b = emb.select(col("vec_id").as("vb"), col("e").as("eb"),
-      col("norm").as("nb"))
-    emb.join(broadcast(b), col("vec_id") < col("vb"))
-      .withColumn("cos",
-        round(dotCol(col("e"), col("eb")) / (col("norm") * col("nb")), 4))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_id").as("vec_a"), col("vb").as("vec_b"), col("cos"))
-  }
-
   /** SemDeDup semantic-duplicate threshold — the d6 near-dup cosine,
     * so the two operators draw the same "duplicate" line. */
   private[operators] val D12Tau = 0.3
@@ -675,12 +660,10 @@ object Similarity {
       // planesFor targets a mean bucket size of ~64, so bucket count
       // grows with N. The oracle computes the identical formula from
       // count(*) in SQL, so both engines agree at any sf. N comes from
-      // a TABLE STATISTIC (GRAFT_EMB_N when the caller knows it, else
-      // the parquet-footer row count — a metadata read, O(files)): the
+      // the parquet-footer row count (a metadata read, O(files)): the
       // r2 form ran a full `.count()` scan just to pick this constant,
       // doubling the query's scan cost at 100 TB.
-      val nPlanes = planesFor(sys.env.get("GRAFT_EMB_N").map(_.toLong)
-        .getOrElse(Fn.rowCountStat(s, dir, "embeddings")))
+      val nPlanes = planesFor(Fn.rowCountStat(s, dir, "embeddings"))
       val bucketed = emb.withColumn("bucket",
         concat((0 until nPlanes).map(h => planeBit(h, col("e"))): _*))
       val probes = bucketed

@@ -398,11 +398,8 @@ object TextAnalysis {
     //    instead of a log idf, whose libm implementations differ in
     //    the last ulp between engines and would break the hash gate;
     //    the ranking it induces is the same for any monotone idf. ──
-    // GRAFT_DOC_N: bench/production override only — never set during
-    // an oracle verification run (the DuckDB twin recomputes count(*))
     ("t10_tfidf_topterms", (s: SparkSession, dir: String) => {
-      val n = sys.env.get("GRAFT_DOC_N").map(_.toLong)
-        .getOrElse(Fn.rowCountStat(s, dir, "documents"))
+      val n = Fn.rowCountStat(s, dir, "documents")
       // tf feeds BOTH the score join and the document-frequency agg —
       // cached (lifetime: the shared Fn registry) so the corpus scans
       // and tokenizes once, not twice. The df agg deliberately stays a

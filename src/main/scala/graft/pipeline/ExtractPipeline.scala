@@ -79,21 +79,7 @@ object ExtractPipeline {
     }
   }
 
-  /** W2: the stable turn-ordering contract — cluster output by
-    * conversation, ordered by turn within it. Used for the final
-    * table layout; per-turn values never depend on it. */
-  def stableOrder(extracted: Dataset[ExtractedTurn]): Dataset[ExtractedTurn] = {
-    import extracted.sparkSession.implicits._
-    extracted.repartition(col("conv_id"))
-      .sortWithinPartitions($"conv_id", $"turn_idx")
-  }
-
   // ── Catalyst column helpers (all codegen-friendly; no UDFs) ───────
-
-  /** P2 as a column (same Java regex as the kernel; lookaround is
-    * supported by Spark's regexp_replace). */
-  def fixDiameterCol(c: Column): Column =
-    regexp_replace(c, "(?<=\\s)O(?=\\d)", "Ø")
 
   /** P8: drawing-number basename of a `…/X.pdf` URL, case-insensitive
     * (backend/main.py:600-604). */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -24,6 +24,39 @@ class ClusterAsofSpec extends AnyFunSuite {
     .getOrCreate()
   locally { spark.sparkContext.setLogLevel("WARN") }
 
+  /** Min-label propagation — the O(diameter)-round classic, kept as an
+    * independently-coded cross-check for the contraction engine (the
+    * two must agree on every graph). Convergence is detected by
+    * COUNTING labels that changed this round (overflow-proof), not a
+    * sum probe. Returns per-vertex (doc_id, lab). */
+  private def minLabelComponents(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graftshim.BlockShim
+    val edges = pairs.select(col("doc_a").as("doc_id"), col("doc_b").as("nbr"))
+      .union(pairs.select(col("doc_b").as("doc_id"), col("doc_a").as("nbr")))
+      .localCheckpoint(true)
+    var lab = edges.groupBy(col("doc_id"))
+      .agg(least(min(col("nbr")), col("doc_id")).as("lab"))
+      .localCheckpoint(true)
+    var changed = 1L
+    while (changed != 0L) {
+      val prop = edges.join(lab, Seq("doc_id"))
+        .select(col("nbr").as("doc_id"), col("lab"))
+      val next = lab.union(prop).groupBy(col("doc_id"))
+        .agg(min(col("lab")).as("lab"))
+        .localCheckpoint(true)
+      changed = next.join(lab.withColumnRenamed("lab", "old"), Seq("doc_id"))
+        .filter(col("lab") =!= col("old")).limit(1).count()
+      BlockShim.unpersist(lab)
+      lab = next
+    }
+    BlockShim.unpersist(edges)
+    graft.operators.Fn.track(lab)
+  }
+
+  /** The distributed leg of `Dedup.contract`, pinned. */
+  private def contractDistributed(pairs: DataFrame) =
+    Dedup.contractDistributed(Dedup.canonical(pairs))
+
   test("bestMatch: shuffle leg ≡ broadcast leg ≡ brute force (tiers, ties, misses)") {
     import spark.implicits._
     import graft.operators.Relational
@@ -39,14 +72,14 @@ class ClusterAsofSpec extends AnyFunSuite {
     val queries = qs.zipWithIndex.map { case (q, i) => (i.toLong, q) }
       .toDF("qid", "q")
     val dict = dictNames.toDF("s_name")
-    def run(dictRows: Long) =
-      Relational.bestMatch(queries, dict, dictRows, minQLen = 5, maxQLen = 16)
+    def run(dictBytes: Long) =
+      Relational.bestMatch(queries, dict, dictBytes, minQLen = 5, maxQLen = 16)
         .collect()
         .map(r => r.getLong(0) ->
           (r.getString(1), r.getString(2), r.getString(3), r.getDouble(4)))
         .toMap
-    val viaBroadcast = run(dictRows = 0L)           // ≤ ceiling → broadcast leg
-    val viaShuffle = run(dictRows = Long.MaxValue)  // > ceiling → shuffle leg
+    val viaBroadcast = run(dictBytes = 0L)           // broadcastable → broadcast leg
+    val viaShuffle = run(dictBytes = Long.MaxValue)  // over the threshold → shuffle leg
     // independent brute force: min (tier, alphabetical-index) per query
     def tier(q: String, cu: String): Int =
       if (cu == q) 0 else if (cu.startsWith(q)) 1
@@ -118,9 +151,9 @@ class ClusterAsofSpec extends AnyFunSuite {
     // a 200-vertex path has diameter 199: min-label propagation needs
     // ~200 rounds; large-star/small-star must stay logarithmic
     val pairs = (1L to 199L).map(i => (i, i + 1))
-    // driverMaxEdges = 0 pins the DISTRIBUTED leg (the default-guard
-    // fast path would resolve this test graph at the driver)
-    val res = Dedup.contract(pairs.toDF("doc_a", "doc_b"), driverMaxEdges = 0)
+    // pin the DISTRIBUTED leg (the driver leg would resolve this test
+    // graph in zero rounds)
+    val res = contractDistributed(pairs.toDF("doc_a", "doc_b"))
     assert(res.rounds <= 12,
       s"contraction took ${res.rounds} rounds on a 200-path — not logarithmic")
     val labs = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -135,9 +168,9 @@ class ClusterAsofSpec extends AnyFunSuite {
       val pairs = Seq.fill(2 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
       val df = pairs.toDF("doc_a", "doc_b")
-      val byContract = Dedup.contract(df, driverMaxEdges = 0).labels
+      val byContract = contractDistributed(df).labels
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val byMinLabel = Dedup.minLabelComponents(df)
+      val byMinLabel = minLabelComponents(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(byContract == byMinLabel, s"trial $trial (n=$n)")
     }
@@ -145,7 +178,7 @@ class ClusterAsofSpec extends AnyFunSuite {
 
   test("driver union-find leg agrees with the distributed contraction leg") {
     import spark.implicits._
-    // the size-adaptive fast path (edge set under CcDriverMaxEdges
+    // the size-adaptive fast path (a pair set that fits the driver
     // collects to a driver union-find) must label identically to the
     // large-star/small-star engine on ANY graph — the two-leg
     // equivalence pin, same discipline as bestMatch's legs
@@ -155,12 +188,60 @@ class ClusterAsofSpec extends AnyFunSuite {
       val pairs = Seq.fill(3 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
       val df = pairs.toDF("doc_a", "doc_b")
-      val fast = Dedup.contract(df).labels // default guard → driver leg
+      val fast = Dedup.contract(df).labels // fits the driver → driver leg
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.contract(df, driverMaxEdges = 0).labels
+      val dist = contractDistributed(df).labels
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fast == dist, s"trial $trial (n=$n)")
     }
+  }
+
+  test("driver union-find leg: one count and one collect of the pair set") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    // jobs are counted by job group; the listener bus delivers events
+    // in order, so once the "end" job is seen every leg job was counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("cc-leg")     => jobs.incrementAndGet()
+          case Some("cc-leg-end") => drained.countDown()
+          case _                  => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // a 40-edge path plus two self-loops: 99 appears in no other pair
+      val pairs = ((1L to 40L).map(i => (i, i + 1)) ++ Seq((7L, 7L), (99L, 99L)))
+        .toDF("doc_a", "doc_b")
+      sc.setJobGroup("cc-leg", "connected components, driver leg")
+      val res = try Dedup.contract(pairs) finally sc.clearJobGroup()
+      sc.setJobGroup("cc-leg-end", "listener drain")
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(res.rounds == 0, "a 42-pair graph must take the driver leg")
+      // the canonical pair set's count and its one collect: the vertex
+      // set comes from the collected pairs, so no vertex job runs
+      assert(jobs.get() == 5, s"${jobs.get()} jobs")
+      val labs = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labs.size == 42)
+      assert((1L to 41L).forall(labs(_) == 1L))
+      assert(labs(99L) == 99L, "a self-loop-only vertex labels itself")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("CC driver leg: the pair bound for a 2 GB driver heap") {
+    import graft.operators.Fn
+    val heap = 2L << 30
+    val cost = Dedup.CcDriverBytesPerEdge
+    val maxPairs = (heap * Fn.DriverHeapShare).toLong / cost
+    assert(Fn.collectable(maxPairs * cost, heap))
+    assert(!Fn.collectable((maxPairs + 1) * cost, heap))
+    // 512 MB of the 2 GB heap at 448 B per pair
+    assert(maxPairs == 1198372L)
   }
 
   test("release() returns executor storage to baseline after a query") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Column/helper library correctness: the scalable two-level ordered
-  * index and the footer-statistic row count. */
+  * index, the footer statistics and the two-leg size policy. */
 class FnSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -99,5 +99,43 @@ class FnSpec extends AnyFunSuite {
     Fn.rowCountStat(spark, sfDir, "embeddings")
     val after = sc.statusTracker.getJobIdsForGroup(null).length
     assert(after == before, "footer statistic must not run a Spark job")
+  }
+
+  test("colBytesStat sums the footers' uncompressed column bytes") {
+    // the figures parquet's own metadata reports for these fixtures
+    assert(Fn.colBytesStat(spark, sfDir, "documents", "text") == 156021L)
+    assert(Fn.colBytesStat(spark, sfDir, "supplier", "s_name") == 313L)
+    intercept[IllegalArgumentException](
+      Fn.colBytesStat(spark, sfDir, "supplier", "no_such_column"))
+  }
+
+  test("broadcastable: 0 <= bytes <= Spark's threshold, never when it is <= 0") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def at(threshold: String)(body: => Unit): Unit = {
+      spark.conf.set(key, threshold)
+      try body finally spark.conf.unset(key)
+    }
+    // Spark's default, 10 MB
+    assert(Fn.broadcastable(spark, 10L << 20))
+    assert(!Fn.broadcastable(spark, (10L << 20) + 1))
+    at("1k") { // Spark's own parsing of the setting: 1024 bytes
+      assert(Fn.broadcastable(spark, 0L))
+      assert(Fn.broadcastable(spark, 1024L))
+      assert(!Fn.broadcastable(spark, 1025L))
+      assert(!Fn.broadcastable(spark, -1L))
+    }
+    at("-1") { assert(!Fn.broadcastable(spark, 0L)) }
+    at("0") { assert(!Fn.broadcastable(spark, 0L)) }
+  }
+
+  test("collectable: bytes fit a quarter of the driver heap") {
+    val heap = 2L << 30
+    assert(Fn.collectable(0L, heap))
+    assert(Fn.collectable(heap / 4, heap))
+    assert(!Fn.collectable(heap / 4 + 1, heap))
+    assert(!Fn.collectable(-1L, heap))
+    // the default heap is this (driver) JVM's
+    val max = Runtime.getRuntime.maxMemory
+    assert(Fn.collectable(max / 4) && !Fn.collectable(max / 4 + 1))
   }
 }

@@ -17,6 +17,11 @@ class KernelEqualitySpec extends AnyFunSuite {
 
   private val ctr = new Extractor.Counters
 
+  /** Jackson-only decode: the cross-check for the FastScan hot path. */
+  private def decodeJackson(json: String): Payload =
+    if (json == null || json.isEmpty || json.charAt(0) != '{') PayloadCodec.empty
+    else PayloadCodec.jackson(json)
+
   private def oracleCells(turn: Turn): (String, Seq[Cell]) = {
     val pl = PayloadCodec.decode(turn.text)
     turn.tool match {
@@ -62,7 +67,7 @@ class KernelEqualitySpec extends AnyFunSuite {
     val corpus = TranscriptGen.corpus(nConvs = 30)
     for (turn <- corpus.turns) {
       val a = PayloadCodec.decode(turn.text)
-      val b = PayloadCodec.decodeJackson(turn.text)
+      val b = decodeJackson(turn.text)
       assert(a.boxes.toSeq == b.boxes.toSeq, turn.conv_id)
       assert(a.lines.toSeq == b.lines.toSeq && a.rects.toSeq == b.rects.toSeq)
       assert((a.w, a.h, a.col) == (b.w, b.h, b.col))
@@ -96,7 +101,7 @@ class KernelEqualitySpec extends AnyFunSuite {
       "{\"w\":1.5,\"h\":2}", "{\"w\":2e3}", "{\"w\":2E+3,\"h\":1.25e-2}")
     for (j <- adversarial) {
       val a = PayloadCodec.decode(j)
-      val b = PayloadCodec.decodeJackson(j)
+      val b = decodeJackson(j)
       assert(a.boxes.toSeq == b.boxes.toSeq, s"boxes for: $j")
       assert(a.lines.toSeq == b.lines.toSeq && a.rects.toSeq == b.rects.toSeq, j)
       assert((a.w, a.h, a.col) == (b.w, b.h, b.col), j)
@@ -127,7 +132,7 @@ class KernelEqualitySpec extends AnyFunSuite {
       val num = sb.toString
       val json = s"""{"boxes":[{"q":[[$num,1],[2,$num],[4,5],[6,7]],"t":"x","c":$num}]}"""
       val a = PayloadCodec.decode(json)
-      val b = PayloadCodec.decodeJackson(json)
+      val b = decodeJackson(json)
       assert(bits(a) == bits(b), s"trial $trial: $num")
     }
     // explicit boundary cases: 15 vs 16 significant digits, 0.x forms
@@ -135,7 +140,7 @@ class KernelEqualitySpec extends AnyFunSuite {
         "0.9999999999999999", "123456789.123456", "1234567.123456789",
         "-0.0", "0.0000001", "-123456789012345")) {
       val json = s"""{"w":1,"boxes":[{"q":[[$num,1],[2,3],[4,5],[6,7]],"t":"x","c":0.5}]}"""
-      assert(bits(PayloadCodec.decode(json)) == bits(PayloadCodec.decodeJackson(json)), num)
+      assert(bits(PayloadCodec.decode(json)) == bits(decodeJackson(json)), num)
     }
   }
 
@@ -149,7 +154,7 @@ class KernelEqualitySpec extends AnyFunSuite {
         val len = rnd.nextInt(maxLen)
         val junk = "{" + Array.fill(len)(alphabet(rnd.nextInt(alphabet.length))).mkString
         val a = PayloadCodec.decode(junk)
-        val b = PayloadCodec.decodeJackson(junk)
+        val b = decodeJackson(junk)
         assert(a.boxes.toSeq == b.boxes.toSeq, s"seed $seed #$i: $junk")
         assert(a.lines.toSeq == b.lines.toSeq && a.rects.toSeq == b.rects.toSeq,
           s"seed $seed #$i: $junk")
@@ -163,7 +168,7 @@ class KernelEqualitySpec extends AnyFunSuite {
             p.substring(0, pos) + alphabet(rnd.nextInt(alphabet.length)) + p.substring(pos + 1)
           }
         val a = PayloadCodec.decode(mutated)
-        val b = PayloadCodec.decodeJackson(mutated)
+        val b = decodeJackson(mutated)
         assert(a.boxes.toSeq == b.boxes.toSeq, s"seed $seed: ${mutated.take(120)}")
         assert((a.w, a.h, a.col) == (b.w, b.h, b.col), s"seed $seed: ${mutated.take(120)}")
       }

@@ -30,6 +30,12 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` set. */
+  private def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bytes.toString)
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
@@ -68,58 +74,84 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // below the guard (every driver corpus) the hot df>cap set rides a
     // broadcast anti-join — the corpus-sized shingle table never
     // shuffles for the cap filter
-    val small = graft.operators.Dedup
-      .shingled(spark, sfDir, hotBroadcastMaxDocs = Long.MaxValue)
+    val small = graft.operators.Dedup.shingled(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(small.contains("BroadcastHashJoin") && small.contains("LeftAnti"),
       "small-corpus leg must broadcast the hot set")
     // above the guard the forced hint is dropped: the hot shingle-TYPE
     // set grows with the corpus (Zipf tail), so the planner/AQE must
-    // pick from real sizes — disable auto-broadcast to pin the
-    // at-scale shape the way the bestMatch large-dict test does
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val large = graft.operators.Dedup
-        .shingled(spark, sfDir, hotBroadcastMaxDocs = 0)
+    // pick from real sizes — disabling broadcasts pins the at-scale
+    // shape the way the bestMatch large-dict test does
+    withBroadcastThreshold(-1) {
+      val large = graft.operators.Dedup.shingled(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(!large.contains("BroadcastHashJoin"),
         "above the guard the anti-join must not force a broadcast")
       assert(large.contains("LeftAnti"), "the df-cap anti-join must survive")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("hot-shingle anti-join: a threshold below the hot-set byte bound forces no broadcast") {
+    import graft.operators.Fn
+    // the hot set's bound is 3·T/33 bytes (T = documents.text footer
+    // bytes); a positive threshold under it must drop the hint even on
+    // a corpus this small — the guard is bytes, not documents
+    val bound = 3 * Fn.colBytesStat(spark, sfDir, "documents", "text") / 33
+    val threshold = bound / 2
+    assert(threshold > 0)
+    withBroadcastThreshold(threshold) {
+      val p = graft.operators.Dedup.shingled(spark, sfDir)
+        .queryExecution.executedPlan.toString
+      assert(p.contains("LeftAnti"), "the df-cap anti-join must survive")
+      assert(!p.contains("BroadcastHashJoin"), p)
+    }
+  }
+
+  /** j1's bestMatch over the test dictionary, with `dictBytes` as its
+    * size statistic, planned with broadcasting off (so the tiny TEST
+    * dictionary can't mask the at-scale plan Catalyst would pick from
+    * size estimates). */
+  private def bestMatchPlan(dictBytes: Long): String = withBroadcastThreshold(-1) {
+    import org.apache.spark.sql.functions._
+    val q = upper(trim(regexp_replace(col("c_name"), "Customer", "Supplier")))
+      .substr(lit(1), lit(9) + (col("c_custkey") % 10).cast("int"))
+    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+      .select(col("c_custkey").as("qid"), q.as("q"))
+    val dict = spark.read.parquet(s"$sfDir/supplier.parquet")
+      .select(col("s_name"))
+    graft.operators.Relational
+      .bestMatch(cust, dict, dictBytes, minQLen = 9, maxQLen = 18)
+      .queryExecution.executedPlan.toString
+  }
+
+  /** The shuffle leg's shape: the scored candidate join is an
+    * equi-join on the inverted substring index — a shuffled join,
+    * never the broadcast nested-loop all-pairs form (which OOMs on a
+    * 10⁷-entry dict). */
+  private def assertShuffleLeg(p: String): Unit = {
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+      "large-dict candidate join must shuffle")
+    assert(!p.contains("CartesianProduct"))
+    // the only permissible nested-loop join is Fn.orderedIndex's
+    // offsets theta-join over the 64-row per-partition counts (its
+    // `_p2 < _pid` condition names the synthetic columns) — the
+    // DATA-sized all-pairs form must not appear
+    val bnl = p.linesIterator.filter(_.contains("BroadcastNestedLoopJoin"))
+    assert(bnl.forall(_.contains("_p2")),
+      "large-dict leg must not plan a data-sized broadcast nested-loop join")
   }
 
   test("bestMatch large-dictionary leg plans a shuffle join, never a broadcast cross join") {
-    import org.apache.spark.sql.functions._
     // the small-dict leg's plan is pinned above (j1_best_match →
     // BroadcastHashJoin, no single-partition exchange). Here: force
-    // the shuffle leg via the dictRows statistic, and disable
-    // auto-broadcast so the tiny TEST dictionary can't mask the
-    // at-scale plan Catalyst would pick from size estimates.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val q = upper(trim(regexp_replace(col("c_name"), "Customer", "Supplier")))
-        .substr(lit(1), lit(9) + (col("c_custkey") % 10).cast("int"))
-      val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-        .select(col("c_custkey").as("qid"), q.as("q"))
-      val dict = spark.read.parquet(s"$sfDir/supplier.parquet")
-        .select(col("s_name"))
-      val p = graft.operators.Relational
-        .bestMatch(cust, dict, dictRows = Long.MaxValue, minQLen = 9, maxQLen = 18)
-        .queryExecution.executedPlan.toString
-      // the scored candidate join must be an equi-join on the inverted
-      // substring index — a shuffled join shape, never the broadcast
-      // nested-loop all-pairs form (which OOMs on a 10⁷-entry dict)
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        "large-dict candidate join must shuffle")
-      assert(!p.contains("CartesianProduct"))
-      // the only permissible nested-loop join is Fn.orderedIndex's
-      // offsets theta-join over the 64-row per-partition counts (its
-      // `_p2 < _pid` condition names the synthetic columns) — the
-      // DATA-sized all-pairs form must not appear
-      val bnl = p.linesIterator.filter(_.contains("BroadcastNestedLoopJoin"))
-      assert(bnl.forall(_.contains("_p2")),
-        "large-dict leg must not plan a data-sized broadcast nested-loop join")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    // the shuffle leg via the dictBytes statistic
+    assertShuffleLeg(bestMatchPlan(dictBytes = Long.MaxValue))
+  }
+
+  test("bestMatch follows Spark's threshold: broadcasting off plans the shuffle leg for a tiny dictionary") {
+    val bytes = graft.operators.Fn.colBytesStat(spark, sfDir, "supplier", "s_name")
+    assert(bytes > 0 && bytes < 10000, bytes)
+    assertShuffleLeg(bestMatchPlan(bytes))
   }
 
   test("bucketed tables co-locate the join: zero exchanges in the plan") {
