@@ -28,8 +28,6 @@ object Multimodal {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Typed media metadata carried next to the binary payload. */
-  final case class MediaMeta(width: Int, height: Int, sample_rate: Int, format: String)
   final case class MediaFeatures(doc_id: Long, kind: String, n_bytes: Int,
                                  feature: Array[Float])
 

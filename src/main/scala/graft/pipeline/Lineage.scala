@@ -5,6 +5,22 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
+/** The resumable run's logical tables and the data table's write
+  * options. */
+object LineageStore {
+  val DataTable = "data"
+  val LineageTable = "lineage"
+
+  /** `extracted_text` is high-cardinality: its parquet dictionary is
+    * built, overflows, and falls back to PLAIN inside every chunk
+    * (footer encodings showed PLAIN_DICTIONARY + PLAIN together), so
+    * the build is pure wasted write CPU — bytes measured identical
+    * with it off. Every OTHER column keeps dictionary encoding
+    * (cells.text and the low-cardinality columns compress well). */
+  val DataWriteOptions: Map[String, String] =
+    Map("parquet.enable.dictionary#extracted_text" -> "false")
+}
+
 /** Idempotent, resumable extraction runs (SURVEY §4.3).
   *
   * The reference's only cross-request state is one scalar high-water
@@ -28,43 +44,6 @@ import java.sql.Timestamp
   * kernel still runs on the scan partitions, so a long conversation is
   * spread by the input's splits, never funnelled through one task.
   */
-final class LineageStore(io: TableIO) {
-
-  def this(outDir: String) =
-    this(new ParquetTableIO(outDir, LineageStore.DataWriteOptions))
-
-  def completedBuckets(spark: SparkSession): Set[Int] =
-    io.readIfExists(spark, LineageStore.LineageTable) match {
-      case None => Set.empty
-      case Some(df) =>
-        import spark.implicits._
-        df.select("partition_id").as[Int].collect().toSet
-    }
-
-  def appendLineage(rows: DataFrame): Unit =
-    io.append(rows, LineageStore.LineageTable)
-
-  def writeData(df: DataFrame): Unit =
-    io.overwritePartitions(df, LineageStore.DataTable, "bucket")
-
-  def readData(spark: SparkSession): DataFrame =
-    io.read(spark, LineageStore.DataTable)
-}
-
-object LineageStore {
-  val DataTable = "data"
-  val LineageTable = "lineage"
-
-  /** `extracted_text` is high-cardinality: its parquet dictionary is
-    * built, overflows, and falls back to PLAIN inside every chunk
-    * (footer encodings showed PLAIN_DICTIONARY + PLAIN together), so
-    * the build is pure wasted write CPU — bytes measured identical
-    * with it off. Every OTHER column keeps dictionary encoding
-    * (cells.text and the low-cardinality columns compress well). */
-  val DataWriteOptions: Map[String, String] =
-    Map("parquet.enable.dictionary#extracted_text" -> "false")
-}
-
 object ResumableExtract {
 
   def bucketOf(convId: org.apache.spark.sql.Column, nBuckets: Int): org.apache.spark.sql.Column =
@@ -93,8 +72,8 @@ object ResumableExtract {
       nBuckets: Int,
       runId: String): Set[Int] = {
     import spark.implicits._
-    val store = new LineageStore(io)
-    val done = store.completedBuckets(spark)
+    val done = io.readIfExists(spark, LineageStore.LineageTable)
+      .fold(Set.empty[Int])(_.select("partition_id").as[Int].collect().toSet)
     val pending = (0 until nBuckets).filterNot(done).toSet
     if (pending.isEmpty) return Set.empty
 
@@ -127,9 +106,10 @@ object ResumableExtract {
     //    re-compute the extraction upstream a second time).
     // Within each bucket the (conv_id, turn_idx) W2 layout is
     // unchanged.
-    store.writeData(
+    io.overwritePartitions(
       BucketLayout.exactRepartition(extracted, $"bucket", nBuckets)
-        .sortWithinPartitions($"bucket", $"conv_id", $"turn_idx"))
+        .sortWithinPartitions($"bucket", $"conv_id", $"turn_idx"),
+      LineageStore.DataTable, "bucket")
 
     // lineage rows from the data just written (cheap agg over the
     // pending buckets only) — committed strictly after the data. The
@@ -139,7 +119,7 @@ object ResumableExtract {
     // full written-data scan a second time inside the append
     // (measured ~1.5 s of a 10M-turn run).
     val now = new Timestamp(System.currentTimeMillis())
-    val stats = store.readData(spark)
+    val stats = io.read(spark, LineageStore.DataTable)
       .filter(col("bucket").isin(pending.toSeq: _*))
       .groupBy($"bucket")
       .agg(
@@ -162,11 +142,11 @@ object ResumableExtract {
       .map { case (b, cmin, cmax, t, c, d) => (runId, b, cmin, cmax, t, c, d, now) }
       .toDF("run_id", "partition_id", "conv_min", "conv_max",
         "turns_done", "cells_emitted", "boxes_dropped", "completed_at")
-    store.appendLineage(allRows)
+    io.append(allRows, LineageStore.LineageTable)
     pending
   }
 
   /** Read the (complete) extracted output of prior runs. */
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
-    new LineageStore(outDir).readData(spark)
+    new ParquetTableIO(outDir, LineageStore.DataWriteOptions).read(spark, LineageStore.DataTable)
 }

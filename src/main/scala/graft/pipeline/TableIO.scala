@@ -70,6 +70,10 @@ final class IcebergTableIO(catalog: String, namespace: String,
   def overwritePartitions(df: DataFrame, table: String, partitionCol: String): Unit =
     if (df.sparkSession.catalog.tableExists(fq(table))) {
       val spark = df.sparkSession
+      // the session conf, not a write option as in ParquetTableIO:
+      // insertInto on a V2 catalog picks OverwritePartitionsDynamic from
+      // the conf alone, and the V1 session catalog cannot take
+      // writeTo(...).overwritePartitions()
       val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // insertInto is POSITIONAL — normalize to the TARGET TABLE's
@@ -113,18 +117,15 @@ final class ParquetTableIO(root: String,
   def append(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Append).options(writeOptions).parquet(path(table))
 
-  def overwritePartitions(df: DataFrame, table: String, partitionCol: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      df.write.mode(SaveMode.Overwrite)
-        .options(writeOptions)
-        .partitionBy(partitionCol)
-        .parquet(path(table))
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  /** Dynamic mode is set on the write itself, which the file writer
+    * reads before the session conf: the shared conf is never touched,
+    * so a concurrent write in the same session (a stream's
+    * `foreachBatch` next to a batch run) cannot flip this one to a
+    * static overwrite that deletes every other partition. */
+  def overwritePartitions(df: DataFrame, table: String, partitionCol: String): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .options(writeOptions)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol)
+      .parquet(path(table))
 }

@@ -2,12 +2,13 @@ package graft.streaming
 
 import graft.kernel.Extractor
 import graft.model.{ExtractedTurn, Turn}
+import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming lift of the extraction pipeline (SURVEY §2.10):
-  * every per-turn operator is stateless, so the batch kernel runs
+  * every per-turn operator is stateless, so the batch island runs
   * unchanged under `readStream` — `Trigger.AvailableNow` turns the
   * same job into an incremental, checkpointed catch-up run over new
   * transcript files (the streaming analog of the lineage-bucket
@@ -24,61 +25,24 @@ object StreamingExtract {
     StructField("tool", StringType),
     StructField("ts", TimestampType)))
 
-  /** The turn source every streaming job reads, any file-source
-    * FORMAT: the source node is the only format-specific piece; the
-    * kernel and every downstream stage are format-agnostic (a
-    * one-sided edit to a per-format copy was the divergence risk). */
-  private def turnStream(spark: SparkSession, inDir: String, maxFilesPerTrigger: Int,
-                         format: String = "parquet"): Dataset[Turn] = {
+  /** The turn source every streaming job reads: a parquet directory
+    * of `Turn` rows, at most `maxFilesPerTrigger` new files per
+    * microbatch. */
+  private def turnStream(spark: SparkSession, inDir: String,
+                         maxFilesPerTrigger: Int): Dataset[Turn] = {
     import spark.implicits._
     spark.readStream
       .schema(turnSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .format(format)
-      .load(inDir)
+      .parquet(inDir)
       .as[Turn]
   }
 
-  /** The batch kernel over a turn stream, one pooled counter set per
-    * partition. */
-  private def kernel(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
-    import turns.sparkSession.implicits._
-    turns.mapPartitions { it =>
-      val ctr = new Extractor.Counters
-      it.map(t => Extractor.extract(t, ctr))
-    }
-  }
-
-  /** Streaming per-turn extraction over a parquet directory source. */
+  /** Streaming per-turn extraction: the batch island
+    * ([[ExtractPipeline.extract]]) over the turn stream, so every
+    * microbatch flushes the same `graft.*` counters as a batch run. */
   def extractStream(spark: SparkSession, inDir: String): Dataset[ExtractedTurn] =
-    kernel(turnStream(spark, inDir, 16))
-
-  /** The same streaming extraction over a JSON-LINES source — the
-    * second ingest format (transcript dumps commonly arrive as JSONL
-    * exports rather than parquet). */
-  def extractStreamJson(spark: SparkSession, inDir: String): Dataset[ExtractedTurn] =
-    kernel(turnStream(spark, inDir, 16, "json"))
-
-  /** Event-time windowed extraction metrics with a watermark: counts
-    * of turns and extracted cells per (1-minute window, tool), late
-    * data beyond 10 minutes dropped — the stateful-streaming shape
-    * (watermark + tumbling window) over the same extraction kernel. */
-  def windowedMetrics(spark: SparkSession, inDir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    turnStream(spark, inDir, 16)
-      .mapPartitions { it =>
-        val ctr = new Extractor.Counters
-        it.map { t =>
-          val e = Extractor.extract(t, ctr)
-          (t.ts, e.tool, e.n_cells)
-        }
-      }
-      .toDF("ts", "tool", "n_cells")
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 minute"), col("tool"))
-      .agg(count(lit(1)).as("turns"), sum(col("n_cells")).as("cells"))
-  }
+    ExtractPipeline.extract(turnStream(spark, inDir, 16), new ExtractPipeline.Metrics(spark))
 
   /** Event-time SESSION windows under `readStream` (the w3 shape,
     * streaming): per-(conv_id, session) turn/cell counts with a gap
@@ -93,6 +57,8 @@ object StreamingExtract {
                      watermarkDelay: String = "48 hours"): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
+    // its own map, not the batch island: the window needs `ts`, which
+    // `ExtractedTurn` does not carry
     turnStream(spark, inDir, 4)
       .mapPartitions { it =>
         val ctr = new Extractor.Counters
@@ -108,51 +74,6 @@ object StreamingExtract {
       .select(col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("conv_id"), col("turns"), col("cells"))
-  }
-
-  /** Source hygiene for at-least-once delivery: drop RE-DELIVERED
-    * turns — same (conv_id, turn_idx) arriving again from a retried
-    * file or replayed partition — before the kernel runs. The state
-    * is keyed per (conv_id, turn_idx) and BOUNDED BY THE WATERMARK:
-    * keys older than (watermark − delay) are evicted, which is what
-    * makes streaming dedup viable at all — an unbounded-time
-    * `dropDuplicates` accumulates one state row per key forever, the
-    * classic streaming-state OOM. The delay is a parameter because
-    * the caller knows the source's redelivery horizon. */
-  def dedupedExtractStream(spark: SparkSession, inDir: String,
-                           watermarkDelay: String = "48 hours"): Dataset[ExtractedTurn] =
-    kernel(turnStream(spark, inDir, 4)
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("conv_id", "turn_idx"))
-
-  /** Running per-conversation progress as CUSTOM streaming state
-    * (SURVEY §2.10 / K5): `flatMapGroupsWithState` keyed on conv_id
-    * maintains (turns seen, cells emitted, max turn index) across
-    * triggers — the streaming form of the high-water-mark update the
-    * batch pipeline writes to lineage. Update output mode: each
-    * trigger emits the refreshed summary only for conversations that
-    * received new turns. */
-  final case class ConvState(turns: Long, cells: Long, maxTurn: Int)
-  final case class ConvProgress(conv_id: String, turns: Long, cells: Long,
-                                max_turn_idx: Int)
-
-  def conversationProgress(spark: SparkSession, inDir: String): Dataset[ConvProgress] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    extractStream(spark, inDir)
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (convId: String, rows: Iterator[ExtractedTurn], state: GroupState[ConvState]) =>
-          val prev = state.getOption.getOrElse(ConvState(0L, 0L, -1))
-          var t = prev.turns
-          var c = prev.cells
-          var m = prev.maxTurn
-          rows.foreach { e =>
-            t += 1; c += e.n_cells; m = math.max(m, e.turn_idx)
-          }
-          state.update(ConvState(t, c, m))
-          Iterator(ConvProgress(convId, t, c, m))
-      }
   }
 
   val StreamDataTable = "stream_data"
