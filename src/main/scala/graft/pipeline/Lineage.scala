@@ -148,5 +148,5 @@ object ResumableExtract {
 
   /** Read the (complete) extracted output of prior runs. */
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
-    new ParquetTableIO(outDir, LineageStore.DataWriteOptions).read(spark, LineageStore.DataTable)
+    new ParquetTableIO(outDir).read(spark, LineageStore.DataTable)
 }
