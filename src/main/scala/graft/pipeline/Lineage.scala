@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -73,7 +75,7 @@ object ResumableExtract {
       runId: String): Set[Int] = {
     import spark.implicits._
     val done = io.readIfExists(spark, LineageStore.LineageTable)
-      .fold(Set.empty[Int])(_.select("partition_id").as[Int].collect().toSet)
+      .fold(Set.empty[Int])(completedBuckets(_, io, nBuckets))
     val pending = (0 until nBuckets).filterNot(done).toSet
     if (pending.isEmpty) return Set.empty
 
@@ -106,47 +108,143 @@ object ResumableExtract {
     //    re-compute the extraction upstream a second time).
     // Within each bucket the (conv_id, turn_idx) W2 layout is
     // unchanged.
+    //
+    // The lineage statistics are observed on this write, not read back
+    // from it: the observation sits above the exchange and the sort, so
+    // it runs in the write's RESULT stage. Spark applies a result task's
+    // accumulator updates once per partition and drops those of failed
+    // attempts, so a retried write task cannot count its rows twice (in
+    // a shuffle-map stage, such as the kernel's, a re-run would count
+    // again). The run-wide `graft.*` accumulators are progress, not
+    // lineage, for that reason.
+    val stats = Observation()
     io.overwritePartitions(
       BucketLayout.exactRepartition(extracted, $"bucket", nBuckets)
-        .sortWithinPartitions($"bucket", $"conv_id", $"turn_idx"),
+        .sortWithinPartitions($"bucket", $"conv_id", $"turn_idx")
+        .observe(stats, udaf(new BucketStatsAgg(nBuckets), BucketStatsAgg.inputEncoder)
+          .apply($"bucket", $"conv_id", $"n_cells", $"n_dropped").as("buckets")),
       LineageStore.DataTable, "bucket")
 
-    // lineage rows from the data just written (cheap agg over the
-    // pending buckets only) — committed strictly after the data. The
-    // aggregate is COLLECTED once (one row per pending bucket — a
-    // bounded, bucket-count-sized result, never data-sized) and the
-    // append runs from the local rows: leaving it lazy re-ran the
-    // full written-data scan a second time inside the append
-    // (measured ~1.5 s of a 10M-turn run).
+    // lineage rows committed strictly after the data; buckets with zero
+    // turns still need a lineage row
     val now = new Timestamp(System.currentTimeMillis())
-    val stats = io.read(spark, LineageStore.DataTable)
-      .filter(col("bucket").isin(pending.toSeq: _*))
-      .groupBy($"bucket")
-      .agg(
-        min($"conv_id").as("conv_min"),
-        max($"conv_id").as("conv_max"),
-        count(lit(1)).as("turns_done"),
-        sum($"n_cells").cast("long").as("cells_emitted"),
-        // derived from the bucket's own written rows (NOT the run-wide
-        // accumulator, which spans all pending buckets and can
-        // double-count under task retries)
-        sum($"n_dropped").cast("long").as("boxes_dropped"))
-      .select($"bucket", $"conv_min", $"conv_max", $"turns_done",
-        $"cells_emitted", $"boxes_dropped")
-      .as[(Int, String, String, Long, Long, Long)]
-      .collect()
-    val present = stats.map(_._1).toSet
-    // buckets with zero turns still need a lineage row
-    val allRows = (stats.toSeq ++
-      (pending -- present).toSeq.map(b => (b, "", "", 0L, 0L, 0L)))
-      .map { case (b, cmin, cmax, t, c, d) => (runId, b, cmin, cmax, t, c, d, now) }
-      .toDF("run_id", "partition_id", "conv_min", "conv_max",
-        "turns_done", "cells_emitted", "boxes_dropped", "completed_at")
+    val observed = stats.get("buckets").asInstanceOf[scala.collection.Map[Int, Row]]
+    val allRows = pending.toSeq.sorted.map { b =>
+      observed.get(b).fold((runId, b, nBuckets, "", "", 0L, 0L, 0L, now)) { r =>
+        (runId, b, nBuckets, r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), now)
+      }
+    }.toDF("run_id", "partition_id", "n_buckets", "conv_min", "conv_max",
+      "turns_done", "cells_emitted", "boxes_dropped", "completed_at")
     io.append(allRows, LineageStore.LineageTable)
     pending
+  }
+
+  /** The buckets a prior run completed, from its lineage rows. A resume
+    * with a different bucket count would hash conversations into other
+    * buckets and write them a second time, so it is refused, as is a
+    * lineage table that does not record its bucket count. */
+  private def completedBuckets(lineage: DataFrame, io: TableIO, nBuckets: Int): Set[Int] = {
+    import lineage.sparkSession.implicits._
+    if (!lineage.columns.contains("n_buckets"))
+      throw new IllegalStateException(s"lineage of $io records no bucket count " +
+        "(n_buckets); it cannot be resumed safely — re-run into a fresh output")
+    val rows = lineage.select("partition_id", "n_buckets").as[(Int, Int)].collect()
+    rows.map(_._2).find(_ != nBuckets).foreach { n =>
+      throw new IllegalStateException(s"output $io was written with $n buckets, but this " +
+        s"run asks for $nBuckets; resume with $n buckets or re-run into a fresh output")
+    }
+    rows.map(_._1).toSet
   }
 
   /** Read the (complete) extracted output of prior runs. */
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
     new ParquetTableIO(outDir).read(spark, LineageStore.DataTable)
+}
+
+/** One bucket's lineage statistics; the strings follow Spark's string
+  * order, as `min`/`max` over the column would. */
+final case class BucketStats(conv_min: String, conv_max: String,
+    turns_done: Long, cells_emitted: Long, boxes_dropped: Long)
+
+/** The buffer of [[BucketStatsAgg]]: one slot per bucket, updated in
+  * place. */
+final case class BucketStatsBuf(convMin: Array[String], convMax: Array[String],
+    turns: Array[Long], cells: Array[Long], dropped: Array[Long])
+
+/** Per-bucket lineage statistics in one aggregate, for
+  * `Dataset.observe`, which takes no GROUP BY (and no built-in
+  * aggregate returns a per-key map). Input: (bucket, conv_id, n_cells,
+  * n_dropped) with 0 <= bucket < nBuckets; output: bucket → stats for
+  * every bucket with at least one row. Null conv_ids count as turns
+  * but are skipped by conv_min/conv_max, as `min`/`max` skip them. */
+final class BucketStatsAgg(nBuckets: Int)
+    extends Aggregator[(Int, String, Int, Int), BucketStatsBuf, Map[Int, BucketStats]] {
+
+  def zero: BucketStatsBuf = BucketStatsBuf(new Array[String](nBuckets),
+    new Array[String](nBuckets), new Array[Long](nBuckets), new Array[Long](nBuckets),
+    new Array[Long](nBuckets))
+
+  def reduce(b: BucketStatsBuf, in: (Int, String, Int, Int)): BucketStatsBuf = {
+    val k = in._1
+    b.turns(k) += 1
+    b.cells(k) += in._3
+    b.dropped(k) += in._4
+    b.convMin(k) = least(in._2, b.convMin(k))
+    b.convMax(k) = greatest(in._2, b.convMax(k))
+    b
+  }
+
+  def merge(a: BucketStatsBuf, b: BucketStatsBuf): BucketStatsBuf = {
+    var k = 0
+    while (k < nBuckets) {
+      a.turns(k) += b.turns(k)
+      a.cells(k) += b.cells(k)
+      a.dropped(k) += b.dropped(k)
+      a.convMin(k) = least(b.convMin(k), a.convMin(k))
+      a.convMax(k) = greatest(b.convMax(k), a.convMax(k))
+      k += 1
+    }
+    a
+  }
+
+  // null is "no conv_id yet" and loses to any string
+  private def least(x: String, y: String): String =
+    if (x == null) y else if (y == null || BucketStatsAgg.compare(x, y) < 0) x else y
+  private def greatest(x: String, y: String): String =
+    if (x == null) y else if (y == null || BucketStatsAgg.compare(x, y) > 0) x else y
+
+  def finish(b: BucketStatsBuf): Map[Int, BucketStats] =
+    (0 until nBuckets).filter(b.turns(_) > 0).map { k =>
+      k -> BucketStats(b.convMin(k), b.convMax(k), b.turns(k), b.cells(k), b.dropped(k))
+    }.toMap
+
+  def bufferEncoder: Encoder[BucketStatsBuf] = BucketStatsAgg.bufferEncoder
+  def outputEncoder: Encoder[Map[Int, BucketStats]] = BucketStatsAgg.outputEncoder
+}
+
+object BucketStatsAgg {
+  // Built once per JVM rather than per run, and without Scala
+  // reflection where Spark offers a constructor (`udaf`'s TypeTag
+  // overload reflects on every call). The buffer is one Java-serialized
+  // object: each write task serializes its buffer once, and a product
+  // encoder over five arrays generated a serializer projection in every
+  // task (about 2 ms of CPU per task in a profile of a 16-bucket write).
+  val inputEncoder: Encoder[(Int, String, Int, Int)] =
+    Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaInt, Encoders.scalaInt)
+  lazy val bufferEncoder: Encoder[BucketStatsBuf] = Encoders.javaSerialization[BucketStatsBuf]
+  lazy val outputEncoder: Encoder[Map[Int, BucketStats]] = ExpressionEncoder[Map[Int, BucketStats]]()
+
+  /** Spark's string order: UTF-8 byte order (`UTF8String.compareTo`),
+    * which is code-point order. `String.compareTo` compares UTF-16
+    * units, which puts a surrogate pair (U+10000 and above) below
+    * U+E000–U+FFFF; comparing code points at the first differing unit
+    * fixes that without encoding either string. */
+  private[graft] def compare(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) a.length - b.length
+    else Character.codePointAt(a, i) - Character.codePointAt(b, i)
+  }
 }

@@ -46,6 +46,8 @@ final class IcebergTableIO(catalog: String, namespace: String,
 
   def fq(table: String): String = s"$catalog.$namespace.$table"
 
+  override def toString: String = s"$catalog.$namespace"
+
   def readIfExists(spark: SparkSession, table: String): Option[DataFrame] =
     if (spark.catalog.tableExists(fq(table))) Some(read(spark, table)) else None
 
@@ -104,6 +106,8 @@ final class ParquetTableIO(root: String,
     writeOptions: Map[String, String] = Map.empty) extends TableIO {
 
   def path(table: String): String = s"$root/$table"
+
+  override def toString: String = root
 
   def readIfExists(spark: SparkSession, table: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path(table))

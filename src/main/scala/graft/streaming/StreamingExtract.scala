@@ -3,7 +3,7 @@ package graft.streaming
 import graft.kernel.Extractor
 import graft.model.{ExtractedTurn, Turn}
 import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -99,20 +99,27 @@ object StreamingExtract {
     * batch_id (that is what makes the row overwrite idempotent). A
     * directory written by the earlier flat-append layout cannot be
     * mixed with this one — migrate by rewriting the old lineage once
-    * (`read -> write.partitionBy("batch_id")`) before resuming. */
+    * (`read -> write.partitionBy("batch_id")`) before resuming.
+    *
+    * `n_rows` is counted by an `Observation` on the data write itself,
+    * so the microbatch is extracted once and never cached. The count
+    * runs in the write's result stage, whose accumulator updates Spark
+    * applies once per partition and drops for failed attempts: a
+    * retried write task does not count its rows twice. */
   def commitBatch(io: graft.pipeline.TableIO,
                   batch: Dataset[ExtractedTurn], batchId: Long): Unit = {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
     import spark.implicits._
-    val out = batch.toDF().withColumn("batch_id", lit(batchId)).persist()
-    try {
-      io.overwritePartitions(out, StreamDataTable, "batch_id")
-      io.overwritePartitions(
-        Seq((out.count(), System.currentTimeMillis(), batchId))
-          .toDF("n_rows", "committed_at_ms", "batch_id"),
-        StreamLineageTable, "batch_id")
-    } finally out.unpersist()
+    val rows = Observation()
+    io.overwritePartitions(
+      batch.toDF().withColumn("batch_id", lit(batchId))
+        .observe(rows, count(lit(1)).as("n_rows")),
+      StreamDataTable, "batch_id")
+    io.overwritePartitions(
+      Seq((rows.get("n_rows").asInstanceOf[Long], System.currentTimeMillis(), batchId))
+        .toDF("n_rows", "committed_at_ms", "batch_id"),
+      StreamLineageTable, "batch_id")
   }
 
   /** Streaming ingestion into the durable table layer: AvailableNow

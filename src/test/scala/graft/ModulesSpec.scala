@@ -350,6 +350,25 @@ class ModulesSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("durable streaming sink: a two-batch catch-up's lineage n_rows equal the rows landed") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_stream_nrows").toString
+    val in = s"$root/in"
+    val io = new graft.pipeline.ParquetTableIO(s"$root/tables")
+    val turns = graft.gen.TranscriptGen.corpus(nConvs = 8).turns
+    // 20 files: the source takes at most 16 per microbatch, so two batches
+    spark.createDataset(turns).repartition(20).write.mode("overwrite").parquet(in)
+    StreamingExtract.runDurableAvailableNow(spark, in, io, s"$root/ckpt").awaitTermination()
+    val lineage = io.read(spark, StreamingExtract.StreamLineageTable)
+      .select("batch_id", "n_rows").as[(Long, Long)].collect().toMap
+    val data = io.read(spark, StreamingExtract.StreamDataTable)
+    assert(lineage.keySet == Set(0L, 1L), s"batches: ${lineage.keySet}")
+    val perBatch = data.groupBy("batch_id").count().as[(Long, Long)].collect().toMap
+    assert(lineage == perBatch)
+    assert(lineage.values.sum == data.count())
+    assert(lineage.values.sum == turns.size)
+  }
+
   test("streaming AvailableNow equals batch extraction; second run is incremental no-op") {
     import spark.implicits._
     val in = Files.createTempDirectory("graft_stream_in").toString

@@ -417,4 +417,176 @@ class PipelineSpec extends AnyFunSuite {
         s"extraction shuffled ${shuffleBytes.get()} bytes — payloads crossed the wire")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  // ── lineage observed on the data write ─────────────────────────────
+
+  test("BucketStatsAgg.compare is Spark's UTF-8 string order, not String.compareTo") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(5)
+    // ASCII, Latin-1, the U+E000–U+FFFF block and surrogate pairs
+    val alphabet = Seq("a", "z", "é", "～", "", "😀", "𐀀", "𝔸")
+    val strs = Seq.fill(400)(Seq.fill(rnd.nextInt(4))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    for (a <- strs; b <- strs.take(40))
+      assert(math.signum(graft.pipeline.BucketStatsAgg.compare(a, b)) ==
+        math.signum(UTF8String.fromString(a).compareTo(UTF8String.fromString(b))), s"$a vs $b")
+    assert("😀".compareTo("～") < 0, "UTF-16 order puts the pair first")
+    assert(graft.pipeline.BucketStatsAgg.compare("😀", "～") > 0)
+  }
+
+  test("lineage rows equal a read-back of the written data (16 buckets, empty bucket, UTF-8 order)") {
+    import spark.implicits._
+    val n = 16
+    val dir = Files.createTempDirectory("graft_lin_rb").toString
+    def bucketOf(ids: Seq[String]): Map[String, Int] =
+      ids.toDF("id").select($"id", ResumableExtract.bucketOf($"id", n))
+        .as[(String, Int)].collect().toMap
+    val byConv = bucketOf(corpus.turns.map(_.conv_id).distinct)
+    // two ids whose UTF-16 and UTF-8 orders differ, hashed into one bucket
+    val cands = bucketOf((0 until 200).flatMap(i => Seq(s"～$i", s"😀$i")))
+    val (wide, narrow) = (0 until 200).iterator
+      .flatMap(i => (0 until 200).iterator.map(j => (s"😀$i", s"～$j")))
+      .find { case (a, b) => cands(a) == cands(b) }.get
+    val shared = cands(wide)
+    // one bucket (not the shared one) left empty: no turn hashes into it
+    val empty = (0 until n).find(_ != shared).get
+    val convs = corpus.turns.map(_.conv_id).distinct.sorted
+    val donorA = corpus.turns.filter(_.conv_id == convs(0)).map(_.copy(conv_id = wide))
+    val donorB = corpus.turns.filter(_.conv_id == convs(1)).map(_.copy(conv_id = narrow))
+    val turns = corpus.turns.filter(t => byConv(t.conv_id) != empty) ++ donorA ++ donorB
+    ResumableExtract.run(spark, spark.createDataset(turns), dir, nBuckets = n)
+
+    val cols = Seq("conv_min", "conv_max", "turns_done", "cells_emitted", "boxes_dropped")
+    val lineage = spark.read.parquet(s"$dir/lineage")
+      .select("partition_id", cols: _*).as[(Int, String, String, Long, Long, Long)]
+      .collect().map(r => r._1 -> r).toMap
+    // the stats query the lineage used to run over the written data
+    val readBack = spark.read.parquet(s"$dir/data")
+      .groupBy($"bucket")
+      .agg(min($"conv_id"), max($"conv_id"), count(lit(1)),
+        sum($"n_cells").cast("long"), sum($"n_dropped").cast("long"))
+      .as[(Int, String, String, Long, Long, Long)]
+      .collect().map(r => r._1 -> r).toMap
+    assert(!readBack.contains(empty))
+    assert(lineage.keySet == (0 until n).toSet)
+    assert(lineage(empty) == ((empty, "", "", 0L, 0L, 0L)), "an empty bucket keeps its row")
+    assert(lineage - empty == readBack)
+    assert(lineage(shared)._3 == wide, s"conv_max of bucket $shared: ${lineage(shared)._3}")
+    assert(spark.read.parquet(s"$dir/lineage").select("n_buckets").as[Int].collect()
+      .forall(_ == n))
+  }
+
+  test("a fresh run submits no job that scans the data table after the write") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft_jobs").toString
+    val dataPath = s"$dir/data"
+    def scans(p: SparkPlanInfo): Boolean =
+      p.metadata.get("Location").exists(_.contains(dataPath)) || p.children.exists(scans)
+    val dataScans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val scanJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    // SQL execution starts precede their jobs on the bus, and the bus
+    // delivers in order: once the drain job is seen, all are counted
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if scans(s.sparkPlanInfo) =>
+          dataScans.add(s.executionId.toString): Unit
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("lineage-run") =>
+            jobs.incrementAndGet()
+            if (props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+                .exists(dataScans.contains)) scanJobs.incrementAndGet()
+          case Some("lineage-run-end") => drained.countDown()
+          case _ => ()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("lineage-run", "resumable run, fresh output")
+      try ResumableExtract.run(spark, spark.createDataset(corpus.turns), dir, nBuckets = 4)
+      finally sc.clearJobGroup()
+      sc.setJobGroup("lineage-run-end", "listener drain")
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() > 0, "the run's jobs were not seen")
+      assert(scanJobs.get() == 0,
+        s"${scanJobs.get()} of ${jobs.get()} jobs scanned $dataPath after writing it")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a write task retried after a failure counts its rows once (child JVM, local[4,2])") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_retry").toString
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+      Seq("-cp", sys.props("java.class.path"), "graft.WriteRetryChild", root)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor() == 0, out.takeRight(40).mkString("\n"))
+    val result = out.find(_.startsWith("RESULT ")).getOrElse(fail(out.takeRight(40).mkString("\n")))
+    val kv = result.stripPrefix("RESULT ").split(" ").map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
+    assert(kv("thrown") == "1", result)
+    assert(kv("rows") == corpus.turns.size.toString, result)
+    assert(kv("turns_done") == kv("rows"), result)
+    assert(kv("clean_rows") == kv("rows"), result)
+    assert(kv("same_rows") == "true", result)
+    assert(kv("same_lineage") == "true", result)
+  }
+
+  test("a resume whose pending buckets hold no turns still commits their lineage rows") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val dir = Files.createTempDirectory("graft_empty_pending").toString
+    val turns = spark.createDataset(TranscriptGen.corpus(nConvs = 3).turns)
+    ResumableExtract.run(spark, turns, dir, nBuckets = 16)
+    val lineage = spark.read.parquet(s"$dir/lineage")
+    val empty = lineage.filter($"turns_done" === 0).select("partition_id").as[Int].collect().toSet
+    assert(empty.nonEmpty, "3 conversations must leave some of 16 buckets empty")
+    lineage.filter(!$"partition_id".isin(empty.toSeq: _*)).write.parquet(s"$dir/lineage_kept")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/lineage"))
+    new java.io.File(s"$dir/lineage_kept").renameTo(new java.io.File(s"$dir/lineage"))
+    // the observation must complete on a write of zero rows, not block
+    val resumed = Await.result(Future(ResumableExtract.run(spark, turns, dir, nBuckets = 16))(
+      scala.concurrent.ExecutionContext.global), 120.seconds)
+    assert(resumed == empty)
+    val after = spark.read.parquet(s"$dir/lineage")
+    assert(after.count() == 16)
+    assert(after.filter($"partition_id".isin(empty.toSeq: _*)).select("turns_done").as[Long]
+      .collect().forall(_ == 0L))
+  }
+
+  test("resume refuses a changed bucket count: 4 buckets, then 8") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_nb").toString
+    val turns = spark.createDataset(corpus.turns)
+    ResumableExtract.run(spark, turns, dir, nBuckets = 4)
+    val e = intercept[IllegalStateException](ResumableExtract.run(spark, turns, dir, nBuckets = 8))
+    assert(e.getMessage.contains("4 buckets") && e.getMessage.contains("asks for 8") &&
+      e.getMessage.contains(dir), e.getMessage)
+    assert(spark.read.parquet(s"$dir/data").count() == corpus.turns.size, "nothing rewritten")
+  }
+
+  test("resume refuses a lineage table that records no bucket count") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_nb_old").toString
+    val turns = spark.createDataset(corpus.turns)
+    ResumableExtract.run(spark, turns, dir, nBuckets = 4)
+    // the lineage layout before n_buckets was recorded
+    spark.read.parquet(s"$dir/lineage").drop("n_buckets")
+      .write.parquet(s"$dir/lineage_old")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/lineage"))
+    new java.io.File(s"$dir/lineage_old").renameTo(new java.io.File(s"$dir/lineage"))
+    val e = intercept[IllegalStateException](ResumableExtract.run(spark, turns, dir, nBuckets = 4))
+    assert(e.getMessage.contains("re-run into a fresh output"), e.getMessage)
+  }
 }
