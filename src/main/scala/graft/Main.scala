@@ -74,8 +74,11 @@ object Main {
         streaming.StreamingExtract
           .runDurableAvailableNow(spark, inDir, io, ckptDir)
           .awaitTermination()
-        val data = io.readIfExists(spark, streaming.StreamingExtract.StreamDataTable)
-        println(s"[stream] caught up; rows=${data.map(_.count()).getOrElse(0L)} " +
+        // one lineage row per batch: its n_rows sum is the table's row
+        // count, without scanning the data every batch ever landed
+        val lineage = io.readIfExists(spark, streaming.StreamingExtract.StreamLineageTable)
+        val rows = lineage.map(_.agg(coalesce(sum($"n_rows"), lit(0L))).as[Long].head())
+        println(s"[stream] caught up; rows=${rows.getOrElse(0L)} " +
           s"lineage at $tablesDir/${streaming.StreamingExtract.StreamLineageTable}")
 
       case "demo" :: rest =>

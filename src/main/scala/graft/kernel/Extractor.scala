@@ -7,8 +7,9 @@ import java.util.Comparator
   * `mapPartitions` on executors. Implements exactly the semantics the
   * plain-Scala oracle (graft.oracle.Oracle) transliterates from the
   * reference, but written for throughput: streaming JSON decode,
-  * primitive arrays, stable TimSort on index-carrying records, no
-  * per-box closures in the hot loops. `KernelEqualitySpec` asserts
+  * primitive arrays, a primitive long-key sort on the simple path and
+  * stable TimSort on index-carrying records in the bands, no per-box
+  * closures in the hot loops. `KernelEqualitySpec` asserts
   * kernel == oracle on the full synthetic corpus.
   *
   * Reference semantics pinned here (citations in the oracle):
@@ -33,9 +34,6 @@ object Extractor {
   private final class Frag(val y: Int, val x: Int, val idx: Int,
                            val text: String, val conf: Double)
 
-  private val byY: Comparator[Frag] = new Comparator[Frag] {
-    def compare(a: Frag, b: Frag): Int = Integer.compare(a.y, b.y)
-  }
   private val byYX: Comparator[Frag] = new Comparator[Frag] {
     def compare(a: Frag, b: Frag): Int = {
       val c = Integer.compare(a.y, b.y)
@@ -118,11 +116,11 @@ object Extractor {
 
   /** Simple path: strip → drop empty → fix_diameter → stable sort by
     * y_center (original order breaks ties). Sorting uses primitive
-    * long keys `(y + 2³¹) << 20 | seq` — stability by construction,
-    * no per-box objects, dual-pivot primitive sort (the comparator
-    * object path remains for the pathological > 2²⁰-box turn). */
+    * long keys `y << 32 | seq`: seq < 2³¹ fills the low word without
+    * reaching the sign bit, so signed-long order is (y, seq) order for
+    * any y, negative included — stability by construction, no per-box
+    * objects, dual-pivot primitive sort, one path for every turn size. */
   def simpleCells(boxes: Array[Box], ctr: Counters): Array[Cell] = {
-    if (boxes.length >= (1 << 20)) return simpleCellsBig(boxes, ctr)
     val texts = new Array[String](boxes.length)
     val confs = new Array[Double](boxes.length)
     val keys = new Array[Long](boxes.length)
@@ -135,7 +133,7 @@ object Extractor {
       else {
         texts(n) = fixDiameter(raw)
         confs(n) = b.c
-        keys(n) = ((b.yCenter.toLong + 0x80000000L) << 20) | n
+        keys(n) = (b.yCenter.toLong << 32) | n
         n += 1
       }
       i += 1
@@ -145,32 +143,10 @@ object Extractor {
     val out = new Array[Cell](n)
     i = 0
     while (i < n) {
-      val idx = (ks(i) & 0xFFFFF).toInt
+      val idx = (ks(i) & 0xFFFFFFFFL).toInt
       out(i) = Cell(texts(idx), confs(idx))
       i += 1
     }
-    out
-  }
-
-  private def simpleCellsBig(boxes: Array[Box], ctr: Counters): Array[Cell] = {
-    val frags = new Array[Frag](boxes.length)
-    var n = 0
-    var i = 0
-    while (i < boxes.length) {
-      val b = boxes(i)
-      val raw = b.t.trim
-      if (raw.isEmpty) ctr.boxesDropped += 1
-      else {
-        frags(n) = new Frag(b.yCenter, 0, n, fixDiameter(raw), b.c)
-        n += 1
-      }
-      i += 1
-    }
-    val slice = java.util.Arrays.copyOf(frags, n)
-    java.util.Arrays.sort(slice, byY) // TimSort: stable
-    val out = new Array[Cell](n)
-    i = 0
-    while (i < n) { out(i) = Cell(slice(i).text, slice(i).conf); i += 1 }
     out
   }
 

@@ -98,14 +98,15 @@ object ResumableExtract {
     //    re-sort, no open-writer-per-partition-value; 3.6× on the
     //    identical write in round 4);
     //  - rows are placed EXACTLY on their bucket's task
-    //    (BucketLayout.exactRepartition), so the write emits
-    //    one file per bucket — the round-4 hash
-    //    repartition on (bucket, conv_id) mixed every bucket into
-    //    every task and a 64-task write emitted ~4096 files, each
-    //    with its own footer and commit rename (9.2 s vs 6.7 s for
-    //    the bucket-contiguous layout; and unlike repartitionByRange
-    //    the exact placement needs no sampling job, which would
-    //    re-compute the extraction upstream a second time).
+    //    (BucketLayout.exactRepartition: Spark's repartitionById, the
+    //    bucket id is the task), so the write emits one file per
+    //    bucket — the round-4 hash repartition on (bucket, conv_id)
+    //    mixed every bucket into every task and a 64-task write
+    //    emitted ~4096 files, each with its own footer and commit
+    //    rename (9.2 s vs 6.7 s for the bucket-contiguous layout; and
+    //    unlike repartitionByRange the exact placement needs no
+    //    sampling job, which would re-compute the extraction upstream
+    //    a second time).
     // Within each bucket the (conv_id, turn_idx) W2 layout is
     // unchanged.
     //

@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the exact bucket→task placement contract. The helper inverts
-  * Spark's repartition hash (murmur3 seed 42) with precomputed probes;
-  * this test asserts the RESULT — every row lands on the partition its
-  * pid names — so a Spark release that changed HashPartitioning's
-  * internals would fail here loudly instead of silently scattering the
-  * durable write back to tasks × buckets files. */
+/** Pins the exact bucket→task placement contract. The helper is
+  * Spark's `repartitionById`; these tests assert the RESULT — every
+  * row lands on the partition `pmod(pid, n)` names — so a Spark release
+  * that changed that placement would fail here loudly instead of
+  * silently scattering the durable write back to tasks × buckets
+  * files. */
 class BucketLayoutSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -47,14 +47,12 @@ class BucketLayoutSpec extends AnyFunSuite {
     assert(placed === Map(0 -> 61, 1 -> 3, 2 -> 0))
   }
 
-  test("identityProbes covers every partition exactly once") {
-    for (n <- Seq(1, 16, 1024)) {
-      val probes = BucketLayout.identityProbes(n)
-      val landed = probes.map { v =>
-        val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42)
-        ((h % n) + n) % n
-      }
-      assert(landed.toSeq === (0 until n))
-    }
+  test("a null pid goes to partition 0") {
+    import spark.implicits._
+    val rows = Seq[(Int, Option[Int])]((0, None), (1, Some(5))).toDF("id", "pid")
+    val placed = BucketLayout.exactRepartition(rows, $"pid", 8)
+      .withColumn("actual", spark_partition_id())
+      .select($"id", $"actual").as[(Int, Int)].collect().toMap
+    assert(placed === Map(0 -> 0, 1 -> 5))
   }
 }

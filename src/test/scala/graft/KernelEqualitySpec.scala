@@ -263,6 +263,16 @@ class KernelEqualitySpec extends AnyFunSuite {
     }
   }
 
+  test("simple-path sort keys order negative and extreme y centers, ties kept") {
+    val rnd = new Random(23L)
+    val ys = Seq(Int.MinValue, Int.MinValue + 1, -1000, -1, 0, 1, 1000, Int.MaxValue - 1)
+    val boxes = Array.tabulate(5000) { i =>
+      val y = ys(rnd.nextInt(ys.size))
+      Box(0, y, 10, y, 10, y, 0, y, s"t$i", 0.5) // y0 == y2: the center is y
+    }
+    assert(Extractor.simpleCells(boxes, ctr).toSeq == Oracle.simpleCells(boxes.toSeq))
+  }
+
   test("html extraction drops nav/footer link farms, keeps long paragraphs") {
     val html = "<html><body>" +
       "<nav><a href='/'>home</a> <a href='/a'>about</a></nav>" +

@@ -412,14 +412,19 @@ class ModulesSpec extends AnyFunSuite {
     // the only trigger mode the suite had not exercised: a long-lived
     // query that keeps polling the source — files that arrive WHILE it
     // runs must flow through without restart
-    val q = StreamingExtract.extractStream(spark, in).writeStream
+    val stream = StreamingExtract.extractStream(spark, in)
+    val q = stream.writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime("300 milliseconds"))
       .start()
     try {
+      // the read names the sink's schema: before the first file lands
+      // there is none to infer, and a failed read is logged as an ERROR
+      // by the session's Observation listener
       def landed(): Long =
-        try spark.read.parquet(out).count() catch { case _: Throwable => 0L }
+        try spark.read.schema(stream.schema).parquet(out).count()
+        catch { case _: Throwable => 0L }
       var deadline = System.currentTimeMillis() + 60000
       while (landed() < first.size && System.currentTimeMillis() < deadline)
         Thread.sleep(200)

@@ -589,4 +589,61 @@ class PipelineSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](ResumableExtract.run(spark, turns, dir, nBuckets = 4))
     assert(e.getMessage.contains("re-run into a fresh output"), e.getMessage)
   }
+
+  test("each bucket is placed on one write task: one file per bucket, fresh run and resume") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val n = 16
+    val dir = Files.createTempDirectory("graft_one_file").toString
+    val turns = spark.createDataset(corpus.turns)
+    // bucket -> names of the parquet files under data/bucket=K/
+    def files(): Map[Int, Set[String]] =
+      new java.io.File(s"$dir/data").listFiles().filter(_.getName.startsWith("bucket=")).map { d =>
+        d.getName.stripPrefix("bucket=").toInt ->
+          d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+      }.toMap
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains(s"$dir/data")) writes.add(qe): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      assert(ResumableExtract.run(spark, turns, dir, nBuckets = n) == (0 until n).toSet)
+      Option(writes.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("the data write was not seen")).executedPlan
+    } finally spark.listenerManager.unregister(listener)
+
+    val withTurns = spark.read.parquet(s"$dir/lineage").filter($"turns_done" > 0)
+      .select("partition_id").as[Int].collect().toSet
+    assert(withTurns.size > 2)
+    val fresh = files()
+    assert(fresh.keySet == withTurns && fresh.values.forall(_.size == 1), fresh)
+
+    // the write's one exchange passes the bucket id through as the
+    // partition id: no hash over a probe lookup
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, plan.treeString)
+    assert(exchanges.head.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough],
+      plan.treeString)
+
+    // drop two buckets' lineage rows and data: the resume rewrites
+    // exactly those two, one file each, and leaves the others' files
+    val lost = withTurns.toSeq.sorted.take(2)
+    spark.read.parquet(s"$dir/lineage").filter(!$"partition_id".isin(lost: _*))
+      .write.parquet(s"$dir/lineage_kept")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/lineage"))
+    new java.io.File(s"$dir/lineage_kept").renameTo(new java.io.File(s"$dir/lineage"))
+    for (b <- lost)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/data/bucket=$b"))
+    assert(ResumableExtract.run(spark, turns, dir, nBuckets = n) == lost.toSet)
+    val resumed = files()
+    assert(resumed.keySet == withTurns && resumed.values.forall(_.size == 1), resumed)
+    assert(resumed -- lost == fresh -- lost)
+  }
 }

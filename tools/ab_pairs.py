@@ -4,6 +4,8 @@
     python3 tools/ab_pairs.py --parent ../parent --change . \\
         --workload default_mix --seeds 501-510 [--pairs 10] [--out runs.jsonl]
     python3 tools/ab_pairs.py --report runs.jsonl
+    python3 tools/ab_pairs.py --counters --parent ../parent --change . \\
+        --workload default_mix --seeds 501
 
 Each pair runs `python3 enginebench/run.py --workload W --seed S
 --seconds N --trace 0` once in each checkout, on the same seed; the
@@ -22,6 +24,12 @@ the bound), and whether the gain rule holds: wins on at least nine
 tenths of the pairs and a median gap larger than the parent's
 interquartile range. `--report` prints the report of an earlier `--out`
 file without running anything.
+
+`--counters` runs `enginebench/run.py --trace 1` once per checkout on
+the first seed and prints the deterministic work counters of the two
+runs side by side (COUNTERS below). It exits non-zero when a counter
+differs or a run gives no result: a change that claims the same work
+shows it here before any clock is read.
 """
 import argparse
 import json
@@ -30,6 +38,12 @@ import statistics
 import subprocess
 import sys
 import time
+
+# Per-layer metrics of `--trace 1` that count work rather than time it:
+# equal inputs give equal values on every host.
+COUNTERS = ["pipeline.jobs", "pipeline.stages", "pipeline.output_files",
+            "assemble.exchanges", "assemble.stages", "streaming.batches",
+            "kernel.cells_per_turn", "kernel.box_keep_ratio", "kernel.block_keep_ratio"]
 
 
 def parse_seeds(text):
@@ -43,9 +57,9 @@ def parse_seeds(text):
     return seeds
 
 
-def run_once(checkout, side, workload, seed, seconds, log_dir):
+def run_once(checkout, side, workload, seed, seconds, log_dir, trace=0):
     cmd = [sys.executable, "enginebench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     err = subprocess.DEVNULL
     if log_dir:
         os.makedirs(log_dir, exist_ok=True)
@@ -119,6 +133,25 @@ def report(runs, bench):
                   f"{f'{wins}/{len(pairs)}':>6} {bound:>11} {'holds' if gain else 'no':>9}")
 
 
+def counter_diff(runs):
+    """Print the COUNTERS of a parent and a change run side by side;
+    return the number of counters that differ or are missing."""
+    res = {r["side"]: r["result"] for r in runs}
+    for r in runs:
+        print(f"{r['side']}: {r['wall_s']:.1f} s, exit {r['exit']}")
+    if any(v is None for v in res.values()):
+        print("a run gave no result")
+        return 1
+    print(f"{'counter':<26} {'parent':>20} {'change':>20}")
+    diffs = 0
+    for name in COUNTERS:
+        p, c = (res[side]["metrics"].get(name, {}).get("value") for side in ("parent", "change"))
+        same = p is not None and p == c
+        diffs += not same
+        print(f"{name:<26} {p!s:>20} {c!s:>20}{'' if same else '  DIFFERS'}")
+    return diffs
+
+
 def main():
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--parent", help="checkout of the parent commit")
@@ -129,6 +162,8 @@ def main():
     p.add_argument("--out", help="append every run to this JSON-lines file")
     p.add_argument("--log-dir", help="keep each run's stderr here")
     p.add_argument("--report", help="print the report of an earlier --out file and exit")
+    p.add_argument("--counters", action="store_true",
+                   help="diff the work counters of one --trace 1 run per checkout")
     a = p.parse_args()
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -147,6 +182,10 @@ def main():
     if pairs > len(seeds):
         p.error(f"{pairs} pairs need {pairs} seeds, got {len(seeds)}")
     checkouts = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    if a.counters:
+        runs = [run_once(checkouts[side], side, a.workload, seeds[0], bench["run_seconds"],
+                         a.log_dir, trace=1) for side in ("parent", "change")]
+        sys.exit(1 if counter_diff(runs) else 0)
     runs = []
     for i, seed in enumerate(seeds[:pairs]):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
