@@ -7,9 +7,10 @@ import java.util.Comparator
   * `mapPartitions` on executors. Implements exactly the semantics the
   * plain-Scala oracle (graft.oracle.Oracle) transliterates from the
   * reference, but written for throughput: streaming JSON decode,
-  * primitive arrays, a primitive long-key sort on the simple path and
-  * stable TimSort on index-carrying records in the bands, no per-box
-  * closures in the hot loops. `KernelEqualitySpec` asserts
+  * primitive arrays, a primitive long-key sort on the simple path and,
+  * on the band and rect paths, one stable (cell, y, x) TimSort of the
+  * kept fragments swept once into cells, no per-box closures in the
+  * hot loops. `KernelEqualitySpec` asserts
   * kernel == oracle on the full synthetic corpus.
   *
   * Reference semantics pinned here (citations in the oracle):
@@ -30,16 +31,22 @@ object Extractor {
     var blocksDropped: Long = 0L
   }
 
-  // reusable sorted-fragment record (stable sort carries the index)
-  private final class Frag(val y: Int, val x: Int, val idx: Int,
+  // a kept fragment tagged with the cell it joins: its band on the
+  // band path, its first containing rect on the rect path
+  private final class Frag(val cell: Int, val y: Int, val x: Int,
                            val text: String, val conf: Double)
 
-  private val byYX: Comparator[Frag] = new Comparator[Frag] {
+  // TimSort is stable: fragments equal in (cell, y, x) keep box order
+  private val byCellYX: Comparator[Frag] = new Comparator[Frag] {
     def compare(a: Frag, b: Frag): Int = {
-      val c = Integer.compare(a.y, b.y)
+      var c = Integer.compare(a.cell, b.cell)
+      if (c == 0) c = Integer.compare(a.y, b.y)
       if (c != 0) c else Integer.compare(a.x, b.x)
     }
   }
+
+  // the cell of a rect that receives no box
+  private val NoBox = Cell("", 0.0)
 
   // P2: lookbehind whitespace, lookahead digit (backend/main.py:47)
   private val DiameterPat = java.util.regex.Pattern.compile("(?<=\\s)O(?=\\d)")
@@ -194,7 +201,10 @@ object Extractor {
     // lines or < 2 bounds (backend/main.py:255-257)
     if (pl.lines.isEmpty || nB < 2) return simpleCells(pl.boxes, ctr)
 
-    // bucket kept boxes into head/middle/tail bands
+    // head (y < bounds(0)), middles [b_i, b_i+1) and tail (y >= last)
+    // tile the y axis in order: each cluster's mean lies below the next
+    // cluster's first y and truncation keeps that order, so the bounds
+    // never decrease and a fragment's band is the number of bounds <= y
     val frags = new Array[Frag](pl.boxes.length)
     var n = 0
     i = 0
@@ -202,67 +212,53 @@ object Extractor {
       val b = pl.boxes(i)
       val t = b.t.trim
       if (t.isEmpty) ctr.boxesDropped += 1
-      else { frags(n) = new Frag(b.yCenter, b.xCenter, n, t, b.c); n += 1 }
+      else {
+        val y = b.yCenter
+        frags(n) = new Frag(boundsAtOrBelow(bounds, nB, y), y, b.xCenter, t, b.c)
+        n += 1
+      }
       i += 1
     }
+    // bands with no fragment make no run, so they are skipped
     val out = Array.newBuilder[Cell]
-    // head: y < bounds(0); middles: [b_i, b_{i+1}); tail: y >= last
-    emitBand(frags, n, Int.MinValue, bounds(0), out, strictLow = false)
-    var bi = 0
-    while (bi < nB - 1) {
-      emitBand(frags, n, bounds(bi), bounds(bi + 1), out, strictLow = true)
-      bi += 1
-    }
-    emitTail(frags, n, bounds(nB - 1), out)
+    sweep(frags, n)((_, cell) => out += cell)
     out.result()
   }
 
-  /** collect frags with lo <= y < hi (head uses y < hi only), sort
-    * (y, x) stable, join " ", min conf; skip empty bands. */
-  private def emitBand(frags: Array[Frag], n: Int, lo: Int, hi: Int,
-                       out: scala.collection.mutable.Builder[Cell, Array[Cell]],
-                       strictLow: Boolean): Unit = {
-    var cnt = 0
-    var i = 0
-    while (i < n) {
-      val f = frags(i)
-      if ((if (strictLow) f.y >= lo else true) && f.y < hi) cnt += 1
-      i += 1
+  /** How many of the non-decreasing `bounds(0 until n)` are <= y. */
+  private def boundsAtOrBelow(bounds: Array[Int], n: Int, y: Int): Int = {
+    var lo = 0
+    var hi = n
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (bounds(mid) <= y) lo = mid + 1 else hi = mid
     }
-    if (cnt == 0) return
-    val band = new Array[Frag](cnt)
-    var j = 0
-    i = 0
-    while (i < n) {
-      val f = frags(i)
-      if ((if (strictLow) f.y >= lo else true) && f.y < hi) { band(j) = f; j += 1 }
-      i += 1
-    }
-    out += joinBand(band)
+    lo
   }
 
-  private def emitTail(frags: Array[Frag], n: Int, lo: Int,
-                       out: scala.collection.mutable.Builder[Cell, Array[Cell]]): Unit = {
-    var cnt = 0
+  /** Sorts `frags(0 until n)` stably by (cell, y, x) and hands each run
+    * of one cell, joined by [[joinBand]], to `emit` in cell order. */
+  private def sweep(frags: Array[Frag], n: Int)(emit: (Int, Cell) => Unit): Unit = {
+    java.util.Arrays.sort(frags, 0, n, byCellYX)
     var i = 0
-    while (i < n) { if (frags(i).y >= lo) cnt += 1; i += 1 }
-    if (cnt == 0) return
-    val band = new Array[Frag](cnt)
-    var j = 0
-    i = 0
-    while (i < n) { if (frags(i).y >= lo) { band(j) = frags(i); j += 1 }; i += 1 }
-    out += joinBand(band)
+    while (i < n) {
+      val cell = frags(i).cell
+      var j = i + 1
+      while (j < n && frags(j).cell == cell) j += 1
+      emit(cell, joinBand(frags, i, j))
+      i = j
+    }
   }
 
-  private def joinBand(band: Array[Frag]): Cell = {
-    java.util.Arrays.sort(band, byYX)
+  /** One cell from a sorted run: texts joined by " ", min confidence. */
+  private def joinBand(frags: Array[Frag], from: Int, until: Int): Cell = {
     val sb = new java.lang.StringBuilder(32)
     var minConf = Double.MaxValue
-    var i = 0
-    while (i < band.length) {
-      if (i > 0) sb.append(' ')
-      sb.append(band(i).text)
-      if (band(i).conf < minConf) minConf = band(i).conf
+    var i = from
+    while (i < until) {
+      if (i > from) sb.append(' ')
+      sb.append(frags(i).text)
+      if (frags(i).conf < minConf) minConf = frags(i).conf
       i += 1
     }
     Cell(sb.toString, minConf)
@@ -291,15 +287,15 @@ object Extractor {
       }
     })
 
-    // assign each kept box to its first containing rect
-    val buckets = new Array[scala.collection.mutable.ArrayBuffer[Frag]](nR)
+    // tag each kept box with its first containing rect
+    val frags = new Array[Frag](pl.boxes.length)
+    var n = 0
     i = 0
     while (i < pl.boxes.length) {
       val b = pl.boxes(i)
       val raw = b.t.trim
       if (raw.isEmpty) ctr.boxesDropped += 1
       else {
-        val cleaned = fixDiameter(raw)
         val mx = b.xCenter
         val my = b.yCenter
         var ri = 0
@@ -309,24 +305,14 @@ object Extractor {
           if (r.x <= mx && mx < r.x + r.w && r.y <= my && my < r.y + r.h) hit = ri
           ri += 1
         }
-        if (hit >= 0) {
-          if (buckets(hit) == null)
-            buckets(hit) = scala.collection.mutable.ArrayBuffer.empty[Frag]
-          buckets(hit) += new Frag(my, mx, i, cleaned, b.c)
-        } else ctr.boxesDropped += 1 // box in no rect is dropped (main.py:199)
+        if (hit >= 0) { frags(n) = new Frag(hit, my, mx, fixDiameter(raw), b.c); n += 1 }
+        else ctr.boxesDropped += 1 // box in no rect is dropped (main.py:199)
       }
       i += 1
     }
 
-    val out = new Array[Cell](nR)
-    i = 0
-    while (i < nR) {
-      val bucket = buckets(i)
-      out(i) =
-        if (bucket == null) Cell("", 0.0) // main.py:197-199
-        else joinBand(bucket.toArray)
-      i += 1
-    }
+    val out = Array.fill(nR)(NoBox) // main.py:197-199
+    sweep(frags, n)((r, cell) => out(r) = cell)
     out
   }
 }

@@ -245,13 +245,6 @@ object HtmlMain {
     else blocks.slice(bestStart, bestEnd).map(_.text).mkString("\n")
   }
 
-  /** Per-block metrics for the accumulator counters (blocks kept/dropped). */
-  def stats(html: String): (Int, Int) = {
-    val keep = classify(segment(html))
-    val kept = keep.count(identity)
-    (kept, keep.length - kept)
-  }
-
   private def countChar(s: String, c: Char): Int = {
     var n = 0; var i = 0
     while (i < s.length) { if (s.charAt(i) == c) n += 1; i += 1 }

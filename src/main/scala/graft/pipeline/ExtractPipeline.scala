@@ -154,9 +154,10 @@ object ExtractPipeline {
     * turns, match against the dictionary, classify, warn, validate,
     * number and route. Everything below is Catalyst columns.
     *
-    * The label turns are hash-partitioned on conv_id once; the C2
-    * `max_by` on (conv_id, col), the J2 pivot on (conv_id, pos) and
-    * the C4 window on conv_id all reuse that one exchange.
+    * The label turns are hash-partitioned on conv_id once; one
+    * aggregate on conv_id (C2's latest column per label, pivoted) feeds
+    * J2's `posexplode(arrays_zip(…))`, and it and the C4 window on
+    * conv_id reuse that one exchange.
     *
     * Materializes EAGERLY: the result is `localCheckpoint`ed before
     * it returns, so the assembly runs once and every consumer
@@ -198,34 +199,29 @@ object ExtractPipeline {
 
     val labels = Seq("PartNumber", "Quantity", "Description", "Material")
 
-    // C2: if a conversation carries two turns with the same column
-    // label (the reference's re-upload-replaces-column flow), the
-    // LATEST turn replaces the WHOLE column — max_by on turn_idx in a
-    // hash aggregate (a per-cell merge would keep a longer stale
-    // column's tail; first() would be partition-order-dependent).
-    val latestPerLabel = extracted.toDF()
-      .filter($"col".isin(labels: _*))
-      .repartition($"conv_id")
-      .groupBy($"conv_id", $"col")
-      .agg(max_by($"cells", $"turn_idx").as("cells"))
-    // J2 positional zip: explode each column's cells, pivot on label.
-    // Group size = #labels; no shuffle of its own (conv_id-partitioned).
-    val cols = latestPerLabel
-      .select($"conv_id", $"col", posexplode($"cells").as(Seq("pos", "cell")))
-    val pivoted = cols.groupBy($"conv_id", $"pos")
-      .pivot("col", labels)
-      .agg(first("cell")) // ≤1 row per (conv, pos, label) after max_by
-
     def field(label: String): Column = {
-      val c = col(label)
+      val c = $"row".getField(label)
       struct(
         coalesce(c.getField("text"), lit("")).as("text"),
         coalesce(c.getField("confidence"), lit(0.0)).as("confidence"),
         c.isNotNull.as("ocr")) // padded positions: not OCR-installed
     }
 
-    val stagedBase = pivoted
-      .select($"conv_id", $"pos".as("row_idx"),
+    // C2 + J2 in one aggregate per conversation: the pivot keeps, per
+    // label, the cells of the LATEST turn (`max_by` on turn_idx — the
+    // reference's re-upload replaces the WHOLE column; a per-cell merge
+    // would keep a longer stale column's tail), then `arrays_zip` pads
+    // the four columns to the longest and `posexplode` numbers the rows
+    val noCells = array().cast(extracted.schema("cells").dataType)
+    val stagedBase = extracted.toDF()
+      .filter($"col".isin(labels: _*))
+      .repartition($"conv_id")
+      .groupBy($"conv_id")
+      .pivot("col", labels)
+      .agg(max_by($"cells", $"turn_idx"))
+      .select($"conv_id", posexplode(arrays_zip(
+        labels.map(l => coalesce(col(l), noCells).as(l)): _*)).as(Seq("row_idx", "row")))
+      .select($"conv_id", $"row_idx",
         field("PartNumber").as("part"), field("Quantity").as("qty"),
         field("Description").as("desc"), field("Material").as("mat"))
       .join(broadcast(convMeta), Seq("conv_id"), "left")

@@ -3,9 +3,8 @@ package graft.streaming
 import graft.kernel.Extractor
 import graft.model.{ExtractedTurn, Turn}
 import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.{Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming lift of the extraction pipeline (SURVEY §2.10):
   * every per-turn operator is stateless, so the batch island runs
@@ -17,14 +16,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingExtract {
 
-  val turnSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType),
-    StructField("turn_idx", IntegerType),
-    StructField("role", StringType),
-    StructField("text", StringType),
-    StructField("tool", StringType),
-    StructField("ts", TimestampType)))
-
   /** The turn source every streaming job reads: a parquet directory
     * of `Turn` rows, at most `maxFilesPerTrigger` new files per
     * microbatch. */
@@ -32,7 +23,7 @@ object StreamingExtract {
                          maxFilesPerTrigger: Int): Dataset[Turn] = {
     import spark.implicits._
     spark.readStream
-      .schema(turnSchema)
+      .schema(Encoders.product[Turn].schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(inDir)
       .as[Turn]

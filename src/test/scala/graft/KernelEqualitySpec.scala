@@ -194,11 +194,52 @@ class KernelEqualitySpec extends AnyFunSuite {
       texts(rnd.nextInt(texts.length)), rnd.nextInt(101) / 100.0)
   }
 
-  private def randPayload(rnd: Random): Payload = {
-    val boxes = Array.fill(rnd.nextInt(15))(randBox(rnd))
-    val lines = Array.fill(rnd.nextInt(9))(rnd.nextInt(400))
-    val rects = Array.fill(rnd.nextInt(7))(
-      Rect(rnd.nextInt(500), rnd.nextInt(300), 1 + rnd.nextInt(200), 1 + rnd.nextInt(100)))
+  private def randPayload(rnd: Random): Payload =
+    if (rnd.nextInt(3) == 0) randLayout(rnd)
+    else {
+      val boxes = Array.fill(rnd.nextInt(15))(randBox(rnd))
+      val lines = Array.fill(rnd.nextInt(9))(rnd.nextInt(400))
+      val rects = Array.fill(rnd.nextInt(7))(
+        Rect(rnd.nextInt(500), rnd.nextInt(300), 1 + rnd.nextInt(200), 1 + rnd.nextInt(100)))
+      Payload(boxes, 600, 400, lines, rects, "")
+    }
+
+  /** Layouts at the cut points of the band and rect sweeps: 40 to 59
+    * line clusters (some lines repeated), box centers exactly on a
+    * bound or one below it, negative and tied (y, x) centers, bands
+    * and rects that receive no box, and overlapping rects. */
+  private def randLayout(rnd: Random): Payload = {
+    val shift = Seq(0, -5000, -(1 << 30))(rnd.nextInt(3))
+    // box heights stay <= 40, so the merge threshold is <= 40 < gap:
+    // every distinct line is its own cluster and its own bound
+    val gap = 41 + rnd.nextInt(40)
+    val bounds = Array.tabulate(40 + rnd.nextInt(20))(k => shift + k * gap)
+    val lines = rnd.shuffle((bounds ++ Array.fill(rnd.nextInt(10))(
+      bounds(rnd.nextInt(bounds.length)))).toSeq).toArray
+    // boxes sit in a window of the bands, so the other bands stay empty
+    val first = rnd.nextInt(bounds.length)
+    val width = 1 + rnd.nextInt(bounds.length - first)
+    def band: Int = bounds(first + rnd.nextInt(width))
+    val boxes = Array.fill(rnd.nextInt(60)) {
+      val y = rnd.nextInt(3) match {
+        case 0 => band
+        case 1 => band - 1
+        case _ => band + rnd.nextInt(gap)
+      }
+      val x = 10 * rnd.nextInt(8)
+      val h = 1 + rnd.nextInt(20) // y - h and y + h center on y exactly
+      Box(x - 5, y - h, x + 5, y - h, x + 5, y + h, x - 5, y + h,
+        texts(rnd.nextInt(texts.length)), rnd.nextInt(101) / 100.0)
+    }
+    val rects = Array.fill(rnd.nextInt(12)) {
+      val top = bounds(rnd.nextInt(bounds.length))
+      rnd.nextInt(4) match {
+        case 0 => Rect(-10 + 10 * rnd.nextInt(4), top, 30 + rnd.nextInt(60), gap)
+        case 1 => Rect(-20, top - gap, 100, 2 * gap + rnd.nextInt(gap)) // overlaps
+        case 2 => Rect(5000, top, 40, 20) // right of every box
+        case _ => Rect(rnd.nextInt(50), top, 1 + rnd.nextInt(40), 1 + rnd.nextInt(20))
+      }
+    }
     Payload(boxes, 600, 400, lines, rects, "")
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -556,7 +557,14 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** Hash keys of every shuffle exchange in the plan that
     * `assembleBom`'s eager `localCheckpoint` executed. */
-  private def assemblyExchangeKeys(manual: Option[DataFrame]): Seq[Seq[String]] = {
+  private def assemblyExchangeKeys(manual: Option[DataFrame]): Seq[Seq[String]] =
+    collect(assemblyPlan(manual)) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning =>
+        h.expressions.map { case a: AttributeReference => a.name; case e => e.sql }
+      }.sortBy(_.mkString(","))
+
+  /** The executed plan of `assembleBom`'s local checkpoint. */
+  private def assemblyPlan(manual: Option[DataFrame]): SparkPlan = {
     import spark.implicits._
     val corpus = graft.gen.TranscriptGen.corpus(nConvs = 40)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
@@ -577,12 +585,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       while (!plans.asScala.exists(_._1 == "localCheckpoint") && System.nanoTime() < deadline)
         Thread.sleep(50)
     } finally spark.listenerManager.unregister(listener)
-    val ckpt = plans.asScala.collectFirst { case ("localCheckpoint", p) => p }
+    plans.asScala.collectFirst { case ("localCheckpoint", p) => p }
       .getOrElse(fail(s"no localCheckpoint execution among ${plans.asScala.map(_._1)}"))
-    collect(ckpt) { case e: ShuffleExchangeExec => e.outputPartitioning }
-      .collect { case h: HashPartitioning =>
-        h.expressions.map { case a: AttributeReference => a.name; case e => e.sql }
-      }.sortBy(_.mkString(","))
   }
 
   test("assembleBom plans one conv_id exchange for C2, J2 and C4") {
@@ -604,6 +608,19 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val keys = assemblyExchangeKeys(Some(manual))
       assert(keys.size <= 5, keys)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("assembleBom aggregates the label turns on conv_id alone: one pivot for C2 and J2") {
+    // C2's latest column per label and J2's positional zip come from
+    // one max_by pivot per conversation: no (conv_id, col) aggregate
+    // before it, no (conv_id, pos) pivot over exploded cells after it
+    val plan = assemblyPlan(None)
+    def readsTurns(p: SparkPlan): Boolean =
+      collect(p) { case q if q.output.exists(_.name == "turn_idx") => q }.nonEmpty
+    val keys = collect(plan) {
+      case a: BaseAggregateExec if readsTurns(a) => a.groupingExpressions.map(_.name)
+    }
+    assert(keys.nonEmpty && keys.forall(_ == Seq("conv_id")), keys)
   }
 
   test("highWaterMarks broadcasts the per-conversation maxima (no shuffle join)") {

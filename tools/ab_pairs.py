@@ -42,7 +42,8 @@ import time
 # Per-layer metrics of `--trace 1` that count work rather than time it:
 # equal inputs give equal values on every host.
 COUNTERS = ["pipeline.jobs", "pipeline.stages", "pipeline.output_files",
-            "assemble.exchanges", "assemble.stages", "streaming.batches",
+            "assemble.exchanges", "assemble.stages", "assemble.rows_routed",
+            "assemble.rows_quarantined", "streaming.batches",
             "kernel.cells_per_turn", "kernel.box_keep_ratio", "kernel.block_keep_ratio"]
 
 
