@@ -112,12 +112,6 @@ object Dedup {
       .agg(count(lit(1)).as("common"))
   }
 
-  /** DuckDB formulation of Fn.md5Prefix32 over expression `e`. */
-  private def sqlHash32(e: String): String =
-    s"""CAST(list_sum(list_transform(range(1, 9),
-        j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-             * CAST(pow(16, 8 - j) AS BIGINT))) AS BIGINT)"""
-
   /** Wide MinHash signatures: one row per doc, `mh[i]` = the seed-i
     * minhash (min over the doc's shingles of md5Prefix32(i + ":" +
     * sh)). ONE hash aggregate with NSeeds min columns over the
@@ -348,7 +342,7 @@ object Dedup {
       sig AS (
         SELECT doc_id, seed, min(h) AS minhash FROM (
           SELECT doc_id, seed,
-                 ${sqlHash32("CAST(seed AS VARCHAR) || ':' || sh")} AS h
+                 ${Fn.sqlHash32Expr("CAST(seed AS VARCHAR) || ':' || sh")} AS h
           FROM sh CROSS JOIN (SELECT unnest(range($NSeeds)) AS seed))
         GROUP BY doc_id, seed),
       banded AS (
@@ -490,7 +484,7 @@ object Dedup {
       $shingledSql
       SELECT doc_id, seed, min(h) AS minhash FROM (
         SELECT doc_id, seed,
-               ${sqlHash32("CAST(seed AS VARCHAR) || ':' || sh")} AS h
+               ${Fn.sqlHash32Expr("CAST(seed AS VARCHAR) || ':' || sh")} AS h
         FROM sh CROSS JOIN (SELECT unnest(range($NSeeds)) AS seed))
       GROUP BY doc_id, seed""")),
 
@@ -796,7 +790,7 @@ object Dedup {
                list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
         FROM documents),
       win AS (
-        SELECT doc_id, ${sqlHash32("array_to_string(t[i:i+7], ' ')")} AS h
+        SELECT doc_id, ${Fn.sqlHash32Expr("array_to_string(t[i:i+7], ' ')")} AS h
         FROM (SELECT doc_id, t, unnest(range(1, len(t) - 8 + 2)) AS i
               FROM toks WHERE len(t) >= 8)),
       rep AS (
@@ -951,7 +945,7 @@ object Dedup {
       sig AS (
         SELECT doc_id, seed, min(h) AS minhash FROM (
           SELECT doc_id, seed,
-                 ${sqlHash32("CAST(seed AS VARCHAR) || ':' || sh")} AS h
+                 ${Fn.sqlHash32Expr("CAST(seed AS VARCHAR) || ':' || sh")} AS h
           FROM sh CROSS JOIN (SELECT unnest(range($NSeeds)) AS seed))
         GROUP BY doc_id, seed)
       SELECT e.doc_a, e.doc_b, e.exact_x1e4,

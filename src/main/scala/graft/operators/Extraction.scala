@@ -681,6 +681,17 @@ object Extraction {
                   AS BIGINT) AS emittable_rows
       FROM flags GROUP BY 1"""
 
+  /** Spark side of [[sqlBomValidation]]: per-conversation validation
+    * flags over the assembled BOM, shared by x_bom_validation and
+    * x_validation_flags' histogram as their oracles share the SQL. */
+  private def bomValidation(asm: DataFrame): DataFrame =
+    asm.groupBy(col("conv_id")).agg(
+      max(when(array_contains(col("missing"), "Type"), 1).otherwise(0)).as("missing_type"),
+      max(when(array_contains(col("missing"), "Part Number"), 1).otherwise(0)).as("missing_part"),
+      max(when(array_contains(col("missing"), "Quantity"), 1).otherwise(0)).as("missing_qty"),
+      max(when(col("invalid_qty"), 1).otherwise(0)).as("invalid_qty"),
+      sum(when(col("emit"), 1).otherwise(0)).as("emittable_rows"))
+
   private def extractSqlCorpus(s: SparkSession, dir: String): DataFrame = {
     val metrics = new ExtractPipeline.Metrics(s)
     ExtractPipeline.extract(SqlCorpus.turns(s, dir), metrics, partitions = 32)
@@ -820,15 +831,8 @@ object Extraction {
     // The oracle CASTs its integer sum(): DuckDB sum(int) is HUGEINT
     // (arrow decimal128) while Spark emits bigint — identical values,
     // different wire type, and the driver's hash is type-sensitive.
-    ("x_bom_validation", (s: SparkSession, dir: String) => {
-      bomAssembled(s, dir)
-        .groupBy(col("conv_id")).agg(
-          max(when(array_contains(col("missing"), "Type"), 1).otherwise(0)).as("missing_type"),
-          max(when(array_contains(col("missing"), "Part Number"), 1).otherwise(0)).as("missing_part"),
-          max(when(array_contains(col("missing"), "Quantity"), 1).otherwise(0)).as("missing_qty"),
-          max(when(col("invalid_qty"), 1).otherwise(0)).as("invalid_qty"),
-          sum(when(col("emit"), 1).otherwise(0)).as("emittable_rows"))
-    }: DataFrame, Some(sqlBomValidation)),
+    ("x_bom_validation", (s: SparkSession, dir: String) =>
+      bomValidation(bomAssembled(s, dir)): DataFrame, Some(sqlBomValidation)),
 
     // C4 alternative sink: quarantined rows of invalid conversations
     // with their violation flags (the at-scale replacement for the
@@ -891,12 +895,7 @@ object Extraction {
     // they would have emitted — the fleet-health view of the
     // reference's per-upload popup (frontend/index.html:2304-2315)
     ("x_validation_flags", (s: SparkSession, dir: String) => {
-      bomAssembled(s, dir).groupBy(col("conv_id")).agg(
-          max(when(array_contains(col("missing"), "Type"), 1).otherwise(0)).as("missing_type"),
-          max(when(array_contains(col("missing"), "Part Number"), 1).otherwise(0)).as("missing_part"),
-          max(when(array_contains(col("missing"), "Quantity"), 1).otherwise(0)).as("missing_qty"),
-          max(when(col("invalid_qty"), 1).otherwise(0)).as("invalid_qty"),
-          sum(when(col("emit"), 1).otherwise(0)).as("emittable_rows"))
+      bomValidation(bomAssembled(s, dir))
         .groupBy(col("missing_type"), col("missing_part"),
           col("missing_qty"), col("invalid_qty"))
         .agg(count(lit(1)).as("n_convs"),

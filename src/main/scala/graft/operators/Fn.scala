@@ -203,6 +203,11 @@ object Fn {
   def tokensCol(text: Column): Column =
     filter(split(lower(text), "\\s+"), t => length(t) > 0)
 
+  /** DuckDB formulation of [[tokensCol]] over the `text` column, as
+    * the oracle SQL spells it. */
+  val sqlTextTokens: String =
+    """list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"""
+
   /** word 3-gram shingles (distinct) over a token array; callers must
     * guard `size(toks) >= 3`. */
   def shinglesCol(toks: Column): Column =
@@ -230,8 +235,8 @@ object Fn {
   def md5Prefix32(s: Column): Column =
     conv(substring(md5(s), 1, 8), 16, 10).cast("long")
 
-  /** DuckDB formulation of [[md5Prefix32]] over SQL expression `e`
-    * (the digit fold the per-family oracle helpers also use). */
+  /** DuckDB formulation of [[md5Prefix32]] over SQL expression `e`:
+    * the digit fold every operator family's oracle SQL uses. */
   def sqlHash32Expr(e: String): String =
     s"""CAST(list_sum(list_transform(range(1, 9),
         j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)

@@ -15,14 +15,6 @@ object Relational {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** DuckDB formulation of Fn.md5Prefix32 over expression `e` (same
-    * helper as Dedup/TextAnalysis — kept per-file so each operator
-    * module's oracle SQL reads standalone). */
-  private def sqlHash32(e: String): String =
-    s"""CAST(list_sum(list_transform(range(1, 9),
-        j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-             * CAST(pow(16, 8 - j) AS BIGINT))) AS BIGINT)"""
-
   /** name → (spark impl, duckdb oracle sql) */
   val defs: Seq[(String, Q, Option[String])] = Seq(
 
@@ -233,7 +225,7 @@ object Relational {
     }: DataFrame, Some(s"""
       WITH b AS (
         SELECT DISTINCT event_type,
-               ${sqlHash32("'lc:' || CAST(user_id AS VARCHAR)")} % 1024 AS bkt
+               ${Fn.sqlHash32Expr("'lc:' || CAST(user_id AS VARCHAR)")} % 1024 AS bkt
         FROM events),
       occ AS (SELECT event_type, count(*) AS occupied FROM b GROUP BY 1),
       ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_distinct

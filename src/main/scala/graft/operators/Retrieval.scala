@@ -42,9 +42,6 @@ object Retrieval {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def sqlToks =
-    """list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"""
-
   val defs: Seq[(String, Q, Option[String])] = Seq(
 
     // ── BM25 top-5 per query: 10 deterministic two-term queries drawn
@@ -108,7 +105,7 @@ object Retrieval {
         .filter(col("rank") <= 5)
         .select(col("query_id"), col("rank"), col("doc_id"), col("score_x1e4"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, ${Fn.sqlTextTokens} AS t FROM documents),
       docs AS (SELECT doc_id, t, CAST(len(t) AS BIGINT) AS dl
                FROM toks WHERE len(t) > 0),
       posting AS (
@@ -236,7 +233,7 @@ object Retrieval {
                    ORDER BY cos DESC, id) AS BIGINT) AS rank_d
           FROM dense0) WHERE rank_d <= 20),
       toks AS (
-        SELECT doc_id, list_distinct($sqlToks) AS t FROM documents),
+        SELECT doc_id, list_distinct(${Fn.sqlTextTokens}) AS t FROM documents),
       toks2 AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
       sparse0 AS (
         SELECT q.doc_id AS qid, c.doc_id AS id,

@@ -27,14 +27,6 @@ object TextAnalysis {
   private def hitCount(toks: Column, words: Seq[String]): Column =
     size(filter(toks, t => t.isin(words.map(lit): _*)))
 
-  private def sqlHash32(e: String): String =
-    s"""CAST(list_sum(list_transform(range(1, 9),
-        j -> (strpos('0123456789abcdef', substr(md5($e), j, 1)) - 1)
-             * CAST(pow(16, 8 - j) AS BIGINT))) AS BIGINT)"""
-
-  private def sqlToks =
-    """list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"""
-
   private def sqlHits(lang: String): String = {
     val lst = stop(lang).map(w => s"'$w'").mkString(", ")
     s"len(list_filter(t, x -> list_contains([$lst], x)))"
@@ -68,7 +60,7 @@ object TextAnalysis {
   }
 
   /** DuckDB twin of [[qualityX1e4]]; expects a `toks(doc_id, t)` CTE
-    * in scope (the same tokenization `sqlToks` produces). */
+    * in scope (the same tokenization `Fn.sqlTextTokens` produces). */
   private[operators] def qualitySqlCte: String = s"""
       q AS (
         SELECT doc_id,
@@ -100,7 +92,7 @@ object TextAnalysis {
           col("best").getField("lang").as("predicted"),
           (lit(0L) - col("best").getField("nh")).as("hits"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, lang AS actual, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, lang AS actual, ${Fn.sqlTextTokens} AS t FROM documents),
       scored AS (
         SELECT doc_id, actual,
                ${sqlHits("de")} AS h_de, ${sqlHits("en")} AS h_en,
@@ -144,7 +136,7 @@ object TextAnalysis {
           fx(col("stop_ratio")).as("stop_ratio_x1e4"),
           fx(col("quality")).as("quality_x1e4"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, ${Fn.sqlTextTokens} AS t FROM documents),
       m AS (
         SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
                CAST(${sqlHits("en")} AS BIGINT) AS stop_hits,
@@ -194,7 +186,7 @@ object TextAnalysis {
           floor((col("n_bigrams") - col("n_distinct")).cast("double")
             / col("n_bigrams") * 10000 + 0.5).cast("long"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, ${Fn.sqlTextTokens} AS t FROM documents),
       bi AS (
         SELECT doc_id,
                list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]) AS b
@@ -224,7 +216,7 @@ object TextAnalysis {
                   WHEN h % 100 < 90 THEN 'validation'
                   ELSE 'test' END AS split
       FROM (SELECT doc_id,
-              ${sqlHash32("'split:' || CAST(doc_id AS VARCHAR)")} AS h
+              ${Fn.sqlHash32Expr("'split:' || CAST(doc_id AS VARCHAR)")} AS h
             FROM documents)""")),
 
     // ── PII scrubbing: email/phone redaction + counts. The PII tokens
@@ -292,7 +284,7 @@ object TextAnalysis {
     }: DataFrame, Some(s"""
       SELECT doc_id, lang, bucket, rate_pm FROM (
         SELECT doc_id, lang,
-               CAST(${sqlHash32("'sample:' || CAST(doc_id AS VARCHAR)")} % 1000
+               CAST(${Fn.sqlHash32Expr("'sample:' || CAST(doc_id AS VARCHAR)")} % 1000
                  AS BIGINT) AS bucket,
                CAST(CASE lang WHEN 'en' THEN 100 WHEN 'fr' THEN 300
                               WHEN 'de' THEN 500 WHEN 'es' THEN 800
@@ -343,9 +335,9 @@ object TextAnalysis {
     }: DataFrame, Some(s"""
       WITH docs AS (
         SELECT doc_id,
-               CAST(len($sqlToks) AS BIGINT) AS n_tokens,
-               ${sqlHash32("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS hs,
-               ${sqlHash32("'shard:' || CAST(doc_id AS VARCHAR)")} % 16 AS shard
+               CAST(len(${Fn.sqlTextTokens}) AS BIGINT) AS n_tokens,
+               ${Fn.sqlHash32Expr("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS hs,
+               ${Fn.sqlHash32Expr("'shard:' || CAST(doc_id AS VARCHAR)")} % 16 AS shard
         FROM documents),
       keyed AS (
         SELECT doc_id, n_tokens,
@@ -383,7 +375,7 @@ object TextAnalysis {
                  WHERE length(lower(trim(text))) >= 8)
       SELECT doc_id, md5(nt) AS digest,
              list_min(list_transform(range(1, length(nt) - 6),
-               i -> ${sqlHash32("substr(nt, i, 8)")})) AS min_gram_hash
+               i -> ${Fn.sqlHash32Expr("substr(nt, i, 8)")})) AS min_gram_hash
       FROM n""")),
 
     // ── TF-IDF top terms per document: the classic keyword/relevance
@@ -495,7 +487,7 @@ object TextAnalysis {
           col("r_words") && col("r_wlen") && col("r_sym") && col("r_bullet") &&
             col("r_ellipsis") && col("r_alpha") && col("r_stops"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, text, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, text, ${Fn.sqlTextTokens} AS t FROM documents),
       m AS (
         SELECT doc_id,
                CAST(len(t) AS BIGINT) AS n_words,
@@ -584,7 +576,7 @@ object TextAnalysis {
             .as("keep_doc"),
           length(array_join(col("kept"), "\n")).cast("long").as("clean_chars"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, ${Fn.sqlTextTokens} AS t FROM documents),
       base AS (
         SELECT doc_id, t, CAST(doc_id % 4 + 4 AS BIGINT) AS k,
                CAST(ceil(len(t) / CAST(doc_id % 4 + 4 AS DOUBLE)) AS BIGINT) AS nl
@@ -658,7 +650,7 @@ object TextAnalysis {
       SELECT d.doc_id, d.lang, c.n_lang,
              least(10000, CAST(floor(10000.0 * t.n_total
                / (t.n_langs * c.n_lang)) AS BIGINT)) AS p_keep_x1e4,
-             ${sqlHash32("CAST(d.doc_id AS VARCHAR)")}
+             ${Fn.sqlHash32Expr("CAST(d.doc_id AS VARCHAR)")}
                * t.n_langs * c.n_lang < 4294967296 * t.n_total AS keep
       FROM documents d JOIN counts c USING (lang) CROSS JOIN totals t""")),
 
@@ -732,9 +724,9 @@ object TextAnalysis {
             dec(lit(4294967296L)) * dec(expr("(n_docs + 3) DIV 4")) *
               dec(col("score_x1e6"))).as("keep"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, lang, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, lang, ${Fn.sqlTextTokens} AS t FROM documents),
       feats AS (
-        SELECT doc_id, lang, ${sqlHash32("tok")} % 1024 AS f
+        SELECT doc_id, lang, ${Fn.sqlHash32Expr("tok")} % 1024 AS f
         FROM (SELECT doc_id, lang, unnest(t) AS tok FROM toks)),
       raw AS (SELECT f, CAST(count(*) AS BIGINT) AS n_raw FROM feats GROUP BY 1),
       tgt AS (SELECT f, CAST(count(*) AS BIGINT) AS n_tgt
@@ -753,7 +745,7 @@ object TextAnalysis {
       sel AS (SELECT CAST(sum(score_x1e6) AS BIGINT) AS w_tot,
                      CAST(count(*) AS BIGINT) AS n_docs FROM scored)
       SELECT s2.doc_id, s2.score_x1e6,
-             CAST(${sqlHash32("CAST(s2.doc_id AS VARCHAR)")} AS HUGEINT) * w_tot
+             CAST(${Fn.sqlHash32Expr("CAST(s2.doc_id AS VARCHAR)")} AS HUGEINT) * w_tot
                < CAST(4294967296 AS HUGEINT) * ((n_docs + 3) // 4) * s2.score_x1e6
                AS keep
       FROM scored s2 CROSS JOIN sel""")),
@@ -786,7 +778,7 @@ object TextAnalysis {
         .filter(col("rank") <= 20)
     }: DataFrame, Some(s"""
       WITH words AS (
-        SELECT unnest($sqlToks) AS w FROM documents),
+        SELECT unnest(${Fn.sqlTextTokens}) AS w FROM documents),
       freq AS (
         SELECT w, CAST(count(*) AS BIGINT) AS n
         FROM words WHERE length(w) >= 2 GROUP BY 1),
@@ -849,7 +841,7 @@ object TextAnalysis {
         .select(col("doc_id"), col("n_bigrams"), col("surprisal_x1e6"),
           (col("surprisal_x1e6") <= col("mean_s")).as("keep"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, ${Fn.sqlTextTokens} AS t FROM documents),
       bg AS (
         SELECT doc_id, t[i] AS w1, t[i] || ' ' || t[i + 1] AS b
         FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
@@ -918,7 +910,7 @@ object TextAnalysis {
           (col("n_paras") - col("n_kept")).cast("double") * 10000 /
             col("n_paras").cast("double") + lit(0.5)).cast("long"))
     }: DataFrame, Some(s"""
-      WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents),
+      WITH toks AS (SELECT doc_id, ${Fn.sqlTextTokens} AS t FROM documents),
       base AS (
         SELECT doc_id, t, CAST(doc_id % 4 + 4 AS BIGINT) AS k,
                CAST(ceil(len(t) / CAST(doc_id % 4 + 4 AS DOUBLE)) AS BIGINT) AS nl
@@ -934,7 +926,7 @@ object TextAnalysis {
         FROM base),
       inst AS (
         SELECT doc_id, i - 1 AS pos, ps[i] AS para,
-               ${sqlHash32("ps[i]")} AS h,
+               ${Fn.sqlHash32Expr("ps[i]")} AS h,
                doc_id * 1048576 + (i - 1) AS occ
         FROM (SELECT doc_id, ps, unnest(range(1, len(ps) + 1)) AS i
               FROM paras)),
@@ -977,7 +969,7 @@ object TextAnalysis {
     }: DataFrame, Some(s"""
       WITH per AS (
         SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(len($sqlToks)) AS BIGINT) AS n_tokens,
+               CAST(sum(len(${Fn.sqlTextTokens})) AS BIGINT) AS n_tokens,
                CAST(sum(length(text)) AS BIGINT) AS n_chars
         FROM documents GROUP BY 1, 2),
       tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM per)

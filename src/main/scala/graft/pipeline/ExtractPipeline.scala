@@ -43,6 +43,22 @@ object ExtractPipeline {
     val cellsOut: LongAccumulator = spark.sparkContext.longAccumulator("graft.cellsOut")
     val blocksKept: LongAccumulator = spark.sparkContext.longAccumulator("graft.blocksKept")
     val blocksDropped: LongAccumulator = spark.sparkContext.longAccumulator("graft.blocksDropped")
+
+    /** One kernel counter set for the running task, flushed into these
+      * accumulators when the task ends, drained or not (a limit above
+      * the island stops pulling early). Call once per partition. */
+    def taskCounters(): Extractor.Counters = {
+      val ctr = new Extractor.Counters
+      TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+        turns.add(ctr.turns)
+        boxesIn.add(ctr.boxesIn)
+        boxesDropped.add(ctr.boxesDropped)
+        cellsOut.add(ctr.cellsOut)
+        blocksKept.add(ctr.blocksKept)
+        blocksDropped.add(ctr.blocksDropped)
+      }
+      ctr
+    }
     override def toString: String =
       s"turns=${turns.value} boxesIn=${boxesIn.value} boxesDropped=${boxesDropped.value} " +
         s"cellsOut=${cellsOut.value} blocksKept=${blocksKept.value} blocksDropped=${blocksDropped.value}"
@@ -63,18 +79,7 @@ object ExtractPipeline {
       else turns.repartition(partitions,
         xxhash64($"conv_id", pmod($"turn_idx", lit(64))))
     repartitioned.mapPartitions { it =>
-      // one pooled kernel + counter set per partition; counters flush
-      // into accumulators when the task ends, drained or not (a limit
-      // above this island stops pulling early)
-      val ctr = new Extractor.Counters
-      TaskContext.get().addTaskCompletionListener[Unit] { _ =>
-        metrics.turns.add(ctr.turns)
-        metrics.boxesIn.add(ctr.boxesIn)
-        metrics.boxesDropped.add(ctr.boxesDropped)
-        metrics.cellsOut.add(ctr.cellsOut)
-        metrics.blocksKept.add(ctr.blocksKept)
-        metrics.blocksDropped.add(ctr.blocksDropped)
-      }
+      val ctr = metrics.taskCounters()
       it.map(Extractor.extract(_, ctr))
     }
   }

@@ -11,12 +11,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    offline): dynamic partition overwrite + append, with the
   *    two-write crash protocol ResumableExtract documents.
   *  - [[IcebergTableIO]] is the cluster implementation, written
-  *    against Spark's catalog-agnostic V2 writer: with an Iceberg
-  *    catalog plugged in, both writes collapse into snapshot-
-  *    transactional commits and `readLineage` becomes a snapshot
-  *    read — the resume semantics survive unchanged because they
-  *    only rely on "lineage row visible ⇒ bucket data complete",
-  *    which a snapshot commit gives for free.
+  *    against Spark's V2 writer (`writeTo`, columns matched by name)
+  *    on any V2 catalog: with an Iceberg catalog plugged in, both
+  *    writes collapse into snapshot-transactional commits and
+  *    `readLineage` becomes a snapshot read — the resume semantics
+  *    survive unchanged because they only rely on "lineage row
+  *    visible ⇒ bucket data complete", which a snapshot commit gives
+  *    for free.
   */
 trait TableIO {
   /** read a logical table; empty-schema None when it does not exist yet */
@@ -33,14 +34,22 @@ trait TableIO {
   * cluster with an Iceberg catalog configured
   * (`spark.sql.catalog.<name> = org.apache.iceberg.spark.SparkCatalog`,
   * `format = "iceberg"`) both pipeline writes become snapshot-
-  * transactional commits: `overwritePartitions()` replaces exactly the
-  * partitions present in `df` in one snapshot, and the resume
-  * invariant ("lineage row visible ⇒ bucket data complete") holds
-  * without the parquet two-write crash protocol. No Iceberg jar exists
-  * in this sandbox, so PipelineSpec exercises the same class against
-  * the built-in session catalog with `format = "parquet"` — the code
-  * path (V2 writer, `tableExists` probe, partitioned create) is
-  * identical; only the catalog plugin differs. */
+  * transactional commits, and the resume invariant ("lineage row
+  * visible ⇒ bucket data complete") holds without the parquet
+  * two-write crash protocol. The catalog must be a V2 one: Spark
+  * refuses `writeTo` on a V1 session-catalog table. No Iceberg jar
+  * exists offline; V2CatalogSpec drives the class through a V2 test
+  * catalog against Spark's real analyzer and write planner.
+  *
+  * Writes to an existing table resolve columns by NAME, whatever the
+  * frame's column order: `append` plans `AppendData`, and
+  * `overwritePartitions` plans `OverwritePartitionsDynamic`, which
+  * replaces exactly the partitions present in `df` in one commit. The
+  * overwrite mode is fixed by that plan, not read from the session's
+  * `spark.sql.sources.partitionOverwriteMode`, so a concurrent write
+  * in the same session cannot turn it into a static overwrite. A
+  * missing table is created by `writeTo(...).create()` (partitioned by
+  * `partitionCol` for `overwritePartitions`). */
 final class IcebergTableIO(catalog: String, namespace: String,
                            format: String = "iceberg") extends TableIO {
 
@@ -54,43 +63,13 @@ final class IcebergTableIO(catalog: String, namespace: String,
   def read(spark: SparkSession, table: String): DataFrame =
     spark.read.table(fq(table))
 
-  /** Writes to an EXISTING table go through `insertInto`, which the
-    * analyzer resolves per catalog: on a V2 catalog (Iceberg) an
-    * overwrite under dynamic partition-overwrite mode becomes
-    * `OverwritePartitionsDynamic` — the same plan as
-    * `writeTo(...).overwritePartitions()`, one snapshot commit — and
-    * an append becomes `AppendData`; on the V1 session catalog the
-    * same calls take the classic Hadoop-FS dynamic-overwrite path
-    * (which is how PipelineSpec exercises this class offline, where
-    * no Iceberg jar exists). `writeTo(...).create()` handles first
-    * creation (partitioned for the data table). */
   def append(df: DataFrame, table: String): Unit =
-    if (df.sparkSession.catalog.tableExists(fq(table)))
-      df.write.mode(SaveMode.Append).insertInto(fq(table))
+    if (df.sparkSession.catalog.tableExists(fq(table))) df.writeTo(fq(table)).append()
     else df.writeTo(fq(table)).using(format).create()
 
   def overwritePartitions(df: DataFrame, table: String, partitionCol: String): Unit =
-    if (df.sparkSession.catalog.tableExists(fq(table))) {
-      val spark = df.sparkSession
-      // the session conf, not a write option as in ParquetTableIO:
-      // insertInto on a V2 catalog picks OverwritePartitionsDynamic from
-      // the conf alone, and the V1 session catalog cannot take
-      // writeTo(...).overwritePartitions()
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // insertInto is POSITIONAL — normalize to the TARGET TABLE's
-      // actual column order (a V1 catalog stores the partition column
-      // last; a V2/Iceberg table keeps the creation order), not to a
-      // guessed partition-column-last layout
-      val ordered = df.select(
-        spark.table(fq(table)).columns
-          .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      try ordered.write.mode(SaveMode.Overwrite).insertInto(fq(table))
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    } else df.writeTo(fq(table)).using(format)
+    if (df.sparkSession.catalog.tableExists(fq(table))) df.writeTo(fq(table)).overwritePartitions()
+    else df.writeTo(fq(table)).using(format)
       .partitionedBy(org.apache.spark.sql.functions.col(partitionCol))
       .create()
 }

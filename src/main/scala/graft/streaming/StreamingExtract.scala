@@ -12,7 +12,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * same job into an incremental, checkpointed catch-up run over new
   * transcript files (the streaming analog of the lineage-bucket
   * resume; on a cluster the source would be an Iceberg streaming
-  * read).
+  * read). The extraction stream lands in one way only:
+  * [[runDurableAvailableNow]], whose microbatches commit through the
+  * [[graft.pipeline.TableIO]] layer ([[commitBatch]]).
   */
 object StreamingExtract {
 
@@ -49,10 +51,11 @@ object StreamingExtract {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // its own map, not the batch island: the window needs `ts`, which
-    // `ExtractedTurn` does not carry
+    // `ExtractedTurn` does not carry; the counters flush like the island's
+    val metrics = new ExtractPipeline.Metrics(spark)
     turnStream(spark, inDir, 4)
       .mapPartitions { it =>
-        val ctr = new Extractor.Counters
+        val ctr = metrics.taskCounters()
         it.map { t =>
           val e = Extractor.extract(t, ctr)
           (t.ts, t.conv_id, e.n_cells)
@@ -117,7 +120,8 @@ object StreamingExtract {
     * catch-up whose every microbatch commits through [[commitBatch]].
     * Restarts resume from the checkpoint; a batch replayed across a
     * crash overwrites its own partition — exactly-once TABLE contents
-    * over an at-least-once sink callback. */
+    * over an at-least-once sink callback. `Main stream`, `tools.Demo`
+    * and the engine benchmark all run this path. */
   def runDurableAvailableNow(
       spark: SparkSession,
       inDir: String,
@@ -127,22 +131,6 @@ object StreamingExtract {
       .foreachBatch { (batch: Dataset[ExtractedTurn], batchId: Long) =>
         commitBatch(io, batch, batchId)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Run an AvailableNow catch-up: process every file not yet in the
-    * checkpoint, write parquet, stop. Re-invoking later processes only
-    * new files — idempotent incremental extraction. */
-  def runAvailableNow(
-      spark: SparkSession,
-      inDir: String,
-      outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    extractStream(spark, inDir).writeStream
-      .format("parquet")
-      .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()

@@ -5,7 +5,9 @@ import graft.streaming.StreamingExtract
 import org.apache.spark.sql.functions._
 
 /** End-to-end drive of the engine's surfaces — extraction, BOM
-  * assembly, multimodal decode, streaming catch-up — printing
+  * assembly, multimodal decode, the durable streaming catch-up that
+  * `Main stream` runs (into a [[graft.pipeline.ParquetTableIO]],
+  * read back from `stream_data`) and session windows — printing
   * observable output. This is the manual-verification entry point
   * (see .claude/skills/verify/SKILL.md); it exercises real flows,
   * not test assertions.
@@ -58,23 +60,25 @@ object Demo {
       .select($"doc_id", $"n_pieces", slice($"pieces", 1, 8).as("first_pieces"))
       .show(3, false)
 
-    println("── streaming AvailableNow (twice: catch-up then no-op) " + "─" * 10)
+    println("── durable streaming catch-up (Main stream's path) " + "─" * 13)
     val in = java.nio.file.Files.createTempDirectory("demo_in").toString
-    val out = java.nio.file.Files.createTempDirectory("demo_out").toString
+    val io = new graft.pipeline.ParquetTableIO(
+      java.nio.file.Files.createTempDirectory("demo_tables").toString)
     val ck = java.nio.file.Files.createTempDirectory("demo_ck").toString
+    def streamed = io.read(spark, StreamingExtract.StreamDataTable)
     val corpus = graft.gen.TranscriptGen.corpus(10)
     spark.createDataset(corpus.turns).repartition(3).write.mode("overwrite").parquet(in)
-    StreamingExtract.runAvailableNow(spark, in, out, ck).awaitTermination()
-    println(s"pass1: ${spark.read.parquet(out).count()} rows (batch wrote ${corpus.turns.size})")
-    StreamingExtract.runAvailableNow(spark, in, out, ck).awaitTermination()
-    println(s"pass2 (no new files): ${spark.read.parquet(out).count()} rows")
+    StreamingExtract.runDurableAvailableNow(spark, in, io, ck).awaitTermination()
+    println(s"pass1: ${streamed.count()} rows (batch wrote ${corpus.turns.size})")
+    StreamingExtract.runDurableAvailableNow(spark, in, io, ck).awaitTermination()
+    println(s"pass2 (no new files): ${streamed.count()} rows")
     // malformed payloads must flow through, not kill the stream
     spark.createDataset(corpus.turns.take(3).map(t =>
       t.copy(conv_id = "junk", text = "{not json", tool = "quick")))
       .coalesce(1).write.mode("append").parquet(in)
-    StreamingExtract.runAvailableNow(spark, in, out, ck).awaitTermination()
-    println(s"pass3 (+3 malformed): ${spark.read.parquet(out).count()} rows")
-    spark.read.parquet(out).filter($"conv_id" === "junk")
+    StreamingExtract.runDurableAvailableNow(spark, in, io, ck).awaitTermination()
+    println(s"pass3 (+3 malformed): ${streamed.count()} rows")
+    streamed.filter($"conv_id" === "junk")
       .select("extracted_text", "n_cells").show(3, false)
 
     println("── streaming session windows (append mode, watermark flush) " + "─" * 5)

@@ -212,6 +212,19 @@ class ModulesSpec extends AnyFunSuite {
         base + (t.turn_idx / 5) * 3600000L + t.turn_idx * 1000L)))
     spark.createDataset(turns).repartition(3).write.mode("overwrite").parquet(in)
 
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val counted = new java.util.concurrent.atomic.AtomicLong
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.filter(_.name.contains("graft.turns"))
+          .foreach(_.update.foreach(u => counted.addAndGet(u.asInstanceOf[Long])))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sess-drain"))
+          drained.countDown()
+    }
+    sc.addSparkListener(listener)
     val q = StreamingExtract.sessionMetrics(spark, in).writeStream
       .format("memory").queryName("sess_out").outputMode("append").start()
     q.processAllAvailable()
@@ -250,6 +263,14 @@ class ModulesSpec extends AnyFunSuite {
       q.processAllAvailable(); Thread.sleep(200)
     }
     q.stop()
+    // the kernel counters flush per task: every turn read (the corpus
+    // plus the sentinel) is counted at least once
+    sc.setJobGroup("sess-drain", "listener drain")
+    try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+    assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    sc.removeSparkListener(listener)
+    assert(counted.get() >= turns.size + 1,
+      s"graft.turns summed ${counted.get()} over ${turns.size + 1} turns read")
     val got = spark.table("sess_out").collect()
       .map(r => (r.getTimestamp(0).getTime, r.getTimestamp(1).getTime,
         r.getString(2), r.getLong(3), r.getLong(4))).toSet
@@ -372,16 +393,17 @@ class ModulesSpec extends AnyFunSuite {
   test("streaming AvailableNow equals batch extraction; second run is incremental no-op") {
     import spark.implicits._
     val in = Files.createTempDirectory("graft_stream_in").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString
+    val io = new graft.pipeline.ParquetTableIO(
+      Files.createTempDirectory("graft_stream_tables").toString)
     val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
 
     val corpus = graft.gen.TranscriptGen.corpus(nConvs = 15)
     spark.createDataset(corpus.turns).repartition(4).write.mode("overwrite").parquet(in)
 
-    val q = StreamingExtract.runAvailableNow(spark, in, out, ckpt)
+    val q = StreamingExtract.runDurableAvailableNow(spark, in, io, ckpt)
     q.awaitTermination()
 
-    val streamed = spark.read.parquet(out)
+    val streamed = io.read(spark, StreamingExtract.StreamDataTable)
       .select("conv_id", "turn_idx", "extracted_text")
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
     val metrics = new graft.pipeline.ExtractPipeline.Metrics(spark)
@@ -393,9 +415,9 @@ class ModulesSpec extends AnyFunSuite {
     // incremental: append one new file, rerun — only the new turns land
     val extra = corpus.turns.take(5).map(t => t.copy(conv_id = "conv-extra"))
     spark.createDataset(extra).coalesce(1).write.mode("append").parquet(in)
-    val q2 = StreamingExtract.runAvailableNow(spark, in, out, ckpt)
+    val q2 = StreamingExtract.runDurableAvailableNow(spark, in, io, ckpt)
     q2.awaitTermination()
-    val after = spark.read.parquet(out).count()
+    val after = io.read(spark, StreamingExtract.StreamDataTable).count()
     assert(after == batch.size + extra.size)
   }
 

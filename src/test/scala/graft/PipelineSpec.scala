@@ -325,49 +325,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(snapshot(dirA).size == corpus.turns.size)
   }
 
-  test("IcebergTableIO (catalog V2 writer): same resume protocol through the session catalog") {
-    import spark.implicits._
-    // no Iceberg jar offline — exercise the IDENTICAL code path (V2
-    // writeTo: tableExists probe, partitioned create, append,
-    // overwritePartitions) against the built-in session catalog with
-    // parquet; on a cluster only the catalog plugin + format differ
-    val io = new graft.pipeline.IcebergTableIO("spark_catalog", "default", "parquet")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    for (t <- Seq("data", "lineage")) {
-      spark.sql(s"DROP TABLE IF EXISTS spark_catalog.default.$t")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/$t"))
-    }
-    try {
-      val turns = spark.createDataset(corpus.turns)
-      val processed = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat")
-      assert(processed == Set(0, 1, 2, 3))
-      assert(ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat").isEmpty,
-        "completed run must be a no-op")
-      // catalog data == plain-parquet pipeline data
-      val got = io.read(spark, "data")
-        .select("conv_id", "turn_idx", "extracted_text")
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
-      assert(got.size == corpus.turns.size)
-      // dynamic overwrite really is per-partition: drop bucket 2+3
-      // lineage, rerun — only those partitions rewrite, content converges
-      val keep = io.read(spark, "lineage").filter(col("partition_id").isin(0, 1))
-      val kept = keep.collect()
-      spark.sql("DROP TABLE spark_catalog.default.lineage")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/lineage"))
-      io.append(spark.createDataFrame(
-        spark.sparkContext.parallelize(kept.toIndexedSeq), keep.schema), "lineage")
-      val resumed = ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "cat2")
-      assert(resumed == Set(2, 3))
-      val after = io.read(spark, "data")
-        .select("conv_id", "turn_idx", "extracted_text")
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
-      assert(after == got)
-    } finally {
-      for (t <- Seq("data", "lineage"))
-        spark.sql(s"DROP TABLE IF EXISTS spark_catalog.default.$t")
-    }
-  }
-
   test("lineage boxes_dropped is a per-bucket metric derived from the bucket's rows") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lin").toString

@@ -11,16 +11,17 @@ import scala.jdk.CollectionConverters._
 /** Proves — against Spark's real analyzer and V2 write planner, via
   * the [[graft.v2.FakeV2Catalog]] test double — that
   * [[IcebergTableIO]]'s writes resolve to the V2 plans its
-  * documentation promises on a V2 (Iceberg-style) catalog. The r3
-  * verdict's open item: PipelineSpec exercised the class only through
-  * the V1 session catalog; whether `overwritePartitions` actually
-  * reaches `OverwritePartitionsDynamic` on a V2 catalog was asserted
-  * nowhere. An Iceberg jar does not exist offline, so the double
+  * documentation promises: `append` to `AppendData`,
+  * `overwritePartitions` to `OverwritePartitionsDynamic` whatever the
+  * session's partition overwrite mode, both matching columns by name.
+  * This is the only suite that drives the class: it needs a V2
+  * catalog, and an Iceberg jar does not exist offline. The double
   * implements the public connector SPI (TableCatalog / SupportsWrite /
   * SupportsDynamicOverwrite) and records which write mode each commit
   * used — if the analyzer picked a different plan (e.g. truncate-
   * overwrite), the recorded mode and the resulting table contents
-  * would both betray it.
+  * would both betray it. The resume protocol (full run, no-op re-run,
+  * crash-resume, partial resume) runs through it end to end.
   */
 class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
 
@@ -119,5 +120,48 @@ class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
     val evBefore = events.size
     assert(ResumableExtract.run(spark, turns, io, 4, "v2run2") == Set.empty)
     assert(events.size == evBefore, "resume no-op must not write")
+  }
+
+  test("overwritePartitions carries dynamic mode in its plan, not the session conf") {
+    import spark.implicits._
+    io.overwritePartitions(Seq((1, "a"), (2, "b")).toDF("bucket", "k"), "data", "bucket")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try io.overwritePartitions(Seq((1, "a2")).toDF("bucket", "k"), "data", "bucket")
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    // the commit ran under the static session mode, yet replaced only
+    // the partition present in the frame
+    assert(FakeV2Catalog.sessionOverwriteModes.asScala.last == "static")
+    assert(events.last == "ns.data:overwriteDynamic", s"saw $events")
+    val got = io.read(spark, "data").select("bucket", "k").as[(Int, String)].collect().toSet
+    assert(got == Set((1, "a2"), (2, "b")))
+  }
+
+  test("V2 partial resume: buckets whose lineage rows are gone are rewritten, data converges") {
+    import spark.implicits._
+    val turns = spark.createDataset(graft.gen.TranscriptGen.corpus(nConvs = 12).turns)
+    def dataMap = io.read(spark, "data")
+      .select("conv_id", "turn_idx", "extracted_text").as[(String, Int, String)]
+      .collect().map { case (c, i, t) => (c, i) -> t }.toMap
+    assert(ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "v2p") == Set(0, 1, 2, 3))
+    assert(ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "v2p").isEmpty,
+      "completed run must be a no-op")
+    val first = dataMap
+    // drop the lineage rows of buckets 2 and 3: only those must rerun
+    val kept = io.read(spark, "lineage").filter(col("partition_id").isin(0, 1))
+    val keptRows = kept.collect().toIndexedSeq
+    spark.sql("DROP TABLE fakev2.ns.lineage")
+    io.append(spark.createDataFrame(spark.sparkContext.parallelize(keptRows), kept.schema),
+      "lineage")
+    val evBefore = events.size
+    assert(ResumableExtract.run(spark, turns, io, nBuckets = 4, runId = "v2p2") == Set(2, 3))
+    assert(events.drop(evBefore).contains("ns.data:overwriteDynamic"), s"saw $events")
+    assert(io.read(spark, "lineage").select("partition_id").as[Int].collect().sorted.toSeq
+      == Seq(0, 1, 2, 3))
+    assert(dataMap == first)
   }
 }

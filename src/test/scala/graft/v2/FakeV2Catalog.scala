@@ -1,5 +1,6 @@
 package graft.v2
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
@@ -28,7 +29,8 @@ import scala.jdk.CollectionConverters._
   * implemented faithfully: commit replaces exactly the stored rows
   * whose partition values appear in the incoming batch. Every write
   * mode that reaches a table is recorded in [[FakeV2Catalog.events]]
-  * for plan-level assertions.
+  * for plan-level assertions, and the committing session's partition
+  * overwrite mode in [[FakeV2Catalog.sessionOverwriteModes]].
   */
 class FakeV2Catalog extends TableCatalog {
   import FakeV2Catalog._
@@ -70,8 +72,11 @@ object FakeV2Catalog {
   private[v2] val tables = TrieMap.empty[Identifier, FakeTable]
   /** "<table>:<mode>" per committed batch write, in commit order */
   val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** the committing session's `spark.sql.sources.partitionOverwriteMode`
+    * per committed batch write, in commit order */
+  val sessionOverwriteModes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  def reset(): Unit = { tables.clear(); events.clear() }
+  def reset(): Unit = { tables.clear(); events.clear(); sessionOverwriteModes.clear() }
 }
 
 private[v2] class FakeTable(tableName: String, tableSchema: StructType,
@@ -121,6 +126,8 @@ private[v2] class FakeTable(tableName: String, tableSchema: StructType,
                   rows = rows.filterNot(r => replaced(partKey(r))) ++ incoming
               }
             }
+            FakeV2Catalog.sessionOverwriteModes.add(SparkSession.active.conf
+              .get("spark.sql.sources.partitionOverwriteMode").toLowerCase)
             FakeV2Catalog.events.add(s"$tableName:$mode"): Unit
           }
           override def abort(messages: Array[WriterCommitMessage]): Unit =

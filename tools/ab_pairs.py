@@ -29,7 +29,11 @@ file without running anything.
 the first seed and prints the deterministic work counters of the two
 runs side by side (COUNTERS below). It exits non-zero when a counter
 differs or a run gives no result: a change that claims the same work
-shows it here before any clock is read.
+shows it here before any clock is read. Below the counters it prints
+the per-turn kernel times and the host's calibration time (TIMINGS
+below) of both runs, for information only: they are clocks, not work,
+and are not compared. Both runs are appended to `--out` like pair runs,
+marked `"trace": 1`; the report leaves them out.
 """
 import argparse
 import json
@@ -45,6 +49,8 @@ COUNTERS = ["pipeline.jobs", "pipeline.stages", "pipeline.output_files",
             "assemble.exchanges", "assemble.stages", "assemble.rows_routed",
             "assemble.rows_quarantined", "streaming.batches",
             "kernel.cells_per_turn", "kernel.box_keep_ratio", "kernel.block_keep_ratio"]
+# Per-layer clocks a `--counters` run also prints, not compared.
+TIMINGS = ("kernel.us_per_turn.", "host.kernel_us")
 
 
 def parse_seeds(text):
@@ -76,8 +82,8 @@ def run_once(checkout, side, workload, seed, seconds, log_dir, trace=0):
     result = None
     if done.returncode == 0 and lines and lines[-1].startswith("{"):
         result = json.loads(lines[-1])
-    return {"side": side, "workload": workload, "seed": seed, "wall_s": round(wall, 1),
-            "exit": done.returncode, "result": result}
+    return {"side": side, "workload": workload, "seed": seed, "trace": trace,
+            "wall_s": round(wall, 1), "exit": done.returncode, "result": result}
 
 
 def quartiles(xs):
@@ -88,6 +94,7 @@ def quartiles(xs):
 
 
 def report(runs, bench):
+    runs = [r for r in runs if r.get("trace", 0) == 0]
     by_key = {(r["workload"], r["seed"], r["side"]): r for r in runs}
     for workload in sorted({r["workload"] for r in runs}):
         seeds = sorted({r["seed"] for r in runs if r["workload"] == workload})
@@ -150,6 +157,12 @@ def counter_diff(runs):
         same = p is not None and p == c
         diffs += not same
         print(f"{name:<26} {p!s:>20} {c!s:>20}{'' if same else '  DIFFERS'}")
+    print("timings (information only, not compared):")
+    names = sorted({n for side in ("parent", "change") for n in res[side]["metrics"]
+                    if n.startswith(TIMINGS)})
+    for name in names:
+        p, c = (res[side]["metrics"].get(name, {}).get("value") for side in ("parent", "change"))
+        print(f"{name:<26} {p!s:>20} {c!s:>20}")
     return diffs
 
 
@@ -186,6 +199,9 @@ def main():
     if a.counters:
         runs = [run_once(checkouts[side], side, a.workload, seeds[0], bench["run_seconds"],
                          a.log_dir, trace=1) for side in ("parent", "change")]
+        if a.out:
+            with open(a.out, "a") as f:
+                f.writelines(json.dumps(r) + "\n" for r in runs)
         sys.exit(1 if counter_diff(runs) else 0)
     runs = []
     for i, seed in enumerate(seeds[:pairs]):
