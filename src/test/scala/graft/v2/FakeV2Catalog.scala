@@ -18,8 +18,8 @@ import scala.jdk.CollectionConverters._
   * here). It exists to prove, against Spark's REAL analyzer and V2
   * write planner, that [[graft.pipeline.IcebergTableIO]]'s calls
   * resolve to the V2 write modes its documentation promises:
-  * `overwritePartitions` under dynamic partition-overwrite mode must
-  * reach the table as `overwriteDynamicPartitions()` on the
+  * `overwritePartitions`, whatever the session's partition overwrite
+  * mode, must reach the table as `overwriteDynamicPartitions()` on the
   * WriteBuilder (the `OverwritePartitionsDynamic` plan — one
   * snapshot-style commit replacing exactly the partitions present in
   * the data), and `append` as a plain build (the `AppendData` plan).

@@ -162,7 +162,7 @@ def counter_diff(runs):
                     if n.startswith(TIMINGS)})
     for name in names:
         p, c = (res[side]["metrics"].get(name, {}).get("value") for side in ("parent", "change"))
-        print(f"{name:<26} {p!s:>20} {c!s:>20}")
+        print(f"{name:<32} {p!s:>20} {c!s:>20}")
     return diffs
 
 
