@@ -33,10 +33,6 @@ object Dedup {
   // (Fn.track / Fn.release — SparkEntry releases on every query entry)
   private def track(df: DataFrame): DataFrame = Fn.track(df)
 
-  /** alias kept for callers/tests that reach the registry through the
-    * dedup API */
-  def release(): Unit = Fn.release()
-
   /** Shingle document-frequency cap: a stop-phrase shingle shared by
     * 10⁶ docs turns the inverted-index self-join quadratic on that one
     * key. Shingles with df > cap carry no near-dup signal (they are
@@ -180,7 +176,7 @@ object Dedup {
     * at very large id domains. `localCheckpoint` truncates the growing
     * lineage each round and every superseded round's blocks are
     * unpersisted immediately; the final labels are registered with the
-    * query-lifetime registry ([[release]]). On a cluster with
+    * query-lifetime registry ([[Fn.release]]). On a cluster with
     * preemptible executors use a reliable `checkpoint` dir so a lost
     * executor re-reads instead of failing the round. */
   def connectedComponents(pairs: DataFrame): DataFrame = {

@@ -9,18 +9,20 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.util.LongAccumulator
 
 /** The Spark-native extraction pipeline (SURVEY §3.1 lifecycle, §7
-  * step 5): read → prune columns → salted repartition →
-  * mapPartitions(pooled kernel) → stable (conv_id, turn_idx) ordering
-  * → Catalyst-only BOM assembly (positional zip → broadcast scored
-  * best-match → classification → warning/validation → numbering →
-  * type routing).
+  * step 5): read → prune columns → mapPartitions(pooled kernel) →
+  * stable (conv_id, turn_idx) ordering → Catalyst-only BOM assembly
+  * (positional zip → broadcast scored best-match → classification →
+  * warning/validation → numbering → type routing).
   *
   * Scale design (100 TB / 10^12 turns, BASELINE.json north_rule):
-  *  - per-turn extraction is embarrassingly parallel; long
-  *    conversations skew `conv_id` partitions, so the extraction
-  *    shuffle is salted on (conv_id, turn_idx) — NOT plain conv_id
-  *    (reference analog: one request per image, no conv affinity
-  *    needed during extraction).
+  *  - per-turn extraction is embarrassingly parallel (reference
+  *    analog: one request per image, no conv affinity needed). The
+  *    durable run (`ResumableExtract.run`), the stream and ScalingBench
+  *    call [[extract]] with `partitions = 0`: the kernel runs on the
+  *    scan partitions and no shuffle precedes it, so a long
+  *    conversation is spread by the input's splits. Only the query
+  *    tier (`Extraction`, `partitions = 32`) salts, repartitioning on
+  *    (conv_id, turn_idx mod 64).
   *  - exactly ONE object boundary: the single mapPartitions island.
   *    Everything downstream (assembly, match, classify, warn,
   *    validate, number, route) is pure Catalyst columns → whole-stage

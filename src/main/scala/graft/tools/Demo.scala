@@ -13,11 +13,24 @@ import org.apache.spark.sql.functions._
   * not test assertions.
   *
   * Usage: runMain graft.tools.Demo [sfDir]
+  *
+  * Everything it writes goes under one `demo_*` temp directory, which
+  * it deletes once the session has stopped.
   */
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val scratch = java.nio.file.Files.createTempDirectory("demo_").toString
     val spark = graft.Sessions.local("graft-demo")
+    try show(spark, sfDir, scratch)
+    finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch)): Unit
+    }
+  }
+
+  private def show(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      scratch: String): Unit = {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -36,7 +49,7 @@ object Demo {
     graft.SparkEntry.queries("x_bom_rows")(spark, sfDir).show(false)
 
     println("── CSV sink (K2) round-trip " + "─" * 30)
-    val csvDir = java.nio.file.Files.createTempDirectory("demo_csv").toString
+    val csvDir = s"$scratch/csv"
     val routed = graft.SparkEntry.queries("x_bom_pipeline")(spark, sfDir)
     routed.write.mode("overwrite").option("header", "true").csv(csvDir)
     val back = spark.read.option("header", "true").csv(csvDir)
@@ -61,10 +74,9 @@ object Demo {
       .show(3, false)
 
     println("── durable streaming catch-up (Main stream's path) " + "─" * 13)
-    val in = java.nio.file.Files.createTempDirectory("demo_in").toString
-    val io = new graft.pipeline.ParquetTableIO(
-      java.nio.file.Files.createTempDirectory("demo_tables").toString)
-    val ck = java.nio.file.Files.createTempDirectory("demo_ck").toString
+    val in = s"$scratch/in"
+    val io = new graft.pipeline.ParquetTableIO(s"$scratch/tables")
+    val ck = s"$scratch/ck"
     def streamed = io.read(spark, StreamingExtract.StreamDataTable)
     val corpus = graft.gen.TranscriptGen.corpus(10)
     spark.createDataset(corpus.turns).repartition(3).write.mode("overwrite").parquet(in)
@@ -82,7 +94,7 @@ object Demo {
       .select("extracted_text", "n_cells").show(3, false)
 
     println("── streaming session windows (append mode, watermark flush) " + "─" * 5)
-    val sessIn = java.nio.file.Files.createTempDirectory("demo_sess").toString
+    val sessIn = s"$scratch/sess"
     val burst = corpus.turns.filter(_.turn_idx < 20).map(t =>
       t.copy(ts = new java.sql.Timestamp(
         1767225600000L + (t.turn_idx / 5) * 3600000L + t.turn_idx * 1000L)))
@@ -96,7 +108,5 @@ object Demo {
       .coalesce(1).write.mode("append").parquet(sessIn)
     sq.processAllAvailable(); sq.processAllAvailable(); sq.stop()
     spark.table("demo_sess").orderBy("conv_id", "session_start").show(6, false)
-
-    spark.stop()
   }
 }

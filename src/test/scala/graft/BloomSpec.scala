@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.Bloom
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * equal d7's bit-for-bit, and the probe must never reject an
   * inserted value (false negatives would silently drop contaminated
   * docs; false positives only cost verify work). */
-class BloomSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-bloom-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class BloomSpec extends AnyFunSuite with SparkSuite {
 
   test("no false negatives: every inserted value probes true") {
     import spark.implicits._

@@ -1,10 +1,9 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Semantics pins for the round-3 additions that the DuckDB oracle
@@ -13,16 +12,7 @@ import java.sql.Timestamp
   * (inclusive match, tied timestamps, the no-prior-order null path —
   * absent from the driver data, where every event has a prior order).
   */
-class ClusterAsofSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-cluster-asof-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class ClusterAsofSpec extends AnyFunSuite with SparkSuite {
 
   /** Min-label propagation — the O(diameter)-round classic, kept as an
     * independently-coded cross-check for the contraction engine (the
@@ -198,39 +188,18 @@ class ClusterAsofSpec extends AnyFunSuite {
 
   test("driver union-find leg: one count and one collect of the pair set") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    // jobs are counted by job group; the listener bus delivers events
-    // in order, so once the "end" job is seen every leg job was counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("cc-leg")     => jobs.incrementAndGet()
-          case Some("cc-leg-end") => drained.countDown()
-          case _                  => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      // a 40-edge path plus two self-loops: 99 appears in no other pair
-      val pairs = ((1L to 40L).map(i => (i, i + 1)) ++ Seq((7L, 7L), (99L, 99L)))
-        .toDF("doc_a", "doc_b")
-      sc.setJobGroup("cc-leg", "connected components, driver leg")
-      val res = try Dedup.contract(pairs) finally sc.clearJobGroup()
-      sc.setJobGroup("cc-leg-end", "listener drain")
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(res.rounds == 0, "a 42-pair graph must take the driver leg")
-      // the canonical pair set's count and its one collect: the vertex
-      // set comes from the collected pairs, so no vertex job runs
-      assert(jobs.get() == 5, s"${jobs.get()} jobs")
-      val labs = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(labs.size == 42)
-      assert((1L to 41L).forall(labs(_) == 1L))
-      assert(labs(99L) == 99L, "a self-loop-only vertex labels itself")
-    } finally sc.removeSparkListener(listener)
+    // a 40-edge path plus two self-loops: 99 appears in no other pair
+    val pairs = ((1L to 40L).map(i => (i, i + 1)) ++ Seq((7L, 7L), (99L, 99L)))
+      .toDF("doc_a", "doc_b")
+    val (res, jobs) = countingJobs("cc-leg")(Dedup.contract(pairs))
+    assert(res.rounds == 0, "a 42-pair graph must take the driver leg")
+    // the canonical pair set's count and its one collect: the vertex
+    // set comes from the collected pairs, so no vertex job runs
+    assert(jobs == 5, s"$jobs jobs")
+    val labs = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labs.size == 42)
+    assert((1L to 41L).forall(labs(_) == 1L))
+    assert(labs(99L) == 99L, "a self-loop-only vertex labels itself")
   }
 
   test("CC driver leg: the pair bound for a 2 GB driver heap") {
@@ -246,7 +215,7 @@ class ClusterAsofSpec extends AnyFunSuite {
 
   test("release() returns executor storage to baseline after a query") {
     import spark.implicits._
-    // the session is shared across suites (getOrCreate), so other
+    // the session is shared across suites (SparkSuite), so other
     // modules' long-lived caches (e.g. the bom-assembly memo) may be
     // resident — assert the DELTA this query adds is fully released,
     // not an absolute-zero storage state
@@ -256,7 +225,7 @@ class ClusterAsofSpec extends AnyFunSuite {
     val pairs = (1L to 99L).map(i => (i, i + 1)) ++ Seq((500L, 501L))
     Dedup.connectedComponents(pairs.toDF("doc_a", "doc_b")).count()
     assert((cachedIds -- before).nonEmpty, "query should have cached blocks")
-    Dedup.release()
+    graft.operators.Fn.release()
     // unpersist(blocking=false) is async on the block manager side —
     // poll briefly before asserting
     val deadline = System.nanoTime() + 10e9.toLong
@@ -276,7 +245,7 @@ class ClusterAsofSpec extends AnyFunSuite {
   test("as-of join matches brute force on random order/event sets") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    val dir = Files.createTempDirectory("graft-asof-rnd").toString
+    val dir = tempDir("graft-asof-rnd")
     def ts(m: Int): Timestamp = new Timestamp(1704067200000L + m * 60000L)
     // random orders and events over 12 users and a coarse minute grid
     // (coarse so timestamp TIES actually occur)
@@ -305,12 +274,11 @@ class ClusterAsofSpec extends AnyFunSuite {
     // carries more than one order
     assert(orders.groupBy(o => (o._1, o._2)).exists(_._2.size > 1),
       "fixture produced no tied order timestamps")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("as-of join: inclusive match, tie dedup, and the no-order null path") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-asof").toString
+    val dir = tempDir("graft-asof")
     def ts(d: Int): Timestamp = Timestamp.valueOf(f"2024-01-$d%02d 00:00:00")
     // user 1: orders at day 10 (key 10) and day 20 (key 30);
     // user 3: two orders at the SAME timestamp (keys 5 and 7 — the
@@ -332,6 +300,5 @@ class ClusterAsofSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == Map(101L -> -1L, 102L -> 10L, 103L -> 10L,
       104L -> 30L, 105L -> -1L, 106L -> 7L))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }

@@ -1,22 +1,12 @@
 package graft
 
 import graft.operators.Fn
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Column/helper library correctness: the scalable two-level ordered
   * index, the footer statistics and the two-leg size policy. */
-class FnSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-fn-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class FnSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -93,12 +83,8 @@ class FnSpec extends AnyFunSuite {
   }
 
   test("rowCountStat launches no Spark job (metadata read only)") {
-    val sc = spark.sparkContext
-    Thread.sleep(300) // let earlier tests' async job events drain
-    val before = sc.statusTracker.getJobIdsForGroup(null).length
-    Fn.rowCountStat(spark, sfDir, "embeddings")
-    val after = sc.statusTracker.getJobIdsForGroup(null).length
-    assert(after == before, "footer statistic must not run a Spark job")
+    val (_, jobs) = countingJobs("row-count-stat")(Fn.rowCountStat(spark, sfDir, "embeddings"))
+    assert(jobs == 0, "footer statistic must not run a Spark job")
   }
 
   test("colBytesStat sums the footers' uncompressed column bytes") {

@@ -22,26 +22,13 @@ class KernelEqualitySpec extends AnyFunSuite {
     if (json == null || json.isEmpty || json.charAt(0) != '{') PayloadCodec.empty
     else PayloadCodec.jackson(json)
 
-  private def oracleCells(turn: Turn): (String, Seq[Cell]) = {
-    val pl = PayloadCodec.decode(turn.text)
-    turn.tool match {
-      case Tool.Quick =>
-        (Oracle.quickText(pl.boxes.toSeq), Oracle.simpleCells(pl.boxes.toSeq))
-      case Tool.TableSimple => ("", Oracle.simpleCells(pl.boxes.toSeq))
-      case Tool.TableBands  => ("", Oracle.bandCells(pl))
-      case Tool.TableRects  => ("", Oracle.rectCells(pl))
-      case Tool.HtmlMain    => (graft.kernel.HtmlMain.extractText(turn.text), Seq.empty)
-      case _                => (turn.text, Seq.empty)
-    }
-  }
-
   test("kernel == oracle on every turn of the t1 corpus (incl. edge cases)") {
     val corpus = TranscriptGen.corpus(nConvs = 50)
     assert(corpus.turns.nonEmpty)
     var checked = 0
     for (turn <- corpus.turns) {
       val got = Extractor.extract(turn, ctr)
-      val (expText, expCells) = oracleCells(turn)
+      val (expText, expCells) = SparkSuite.oracleExtract(turn)
       assert(got.extracted_text == expText,
         s"text mismatch at ${turn.conv_id}/${turn.turn_idx} (${turn.tool})")
       assert(got.cells.toSeq == expCells,
@@ -287,7 +274,7 @@ class KernelEqualitySpec extends AnyFunSuite {
     }
   }
 
-  test("pathological turn beyond 2^20 boxes takes the fallback sort, equals oracle") {
+  test("simple cells of a turn beyond 2^20 boxes with y ties equal the oracle") {
     val n = (1 << 20) + 5
     val rnd = new Random(17L)
     val boxes = Array.tabulate(n) { i =>

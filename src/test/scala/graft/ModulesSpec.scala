@@ -2,25 +2,22 @@ package graft
 
 import graft.operators.Multimodal
 import graft.streaming.StreamingExtract
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Multimodal plumbing + Structured Streaming parity with the batch
   * pipeline. */
-class ModulesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-modules-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class ModulesSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** Sums every finished task's `graft.turns` accumulator update into `counted`. */
+  private def turnsCounter(counted: java.util.concurrent.atomic.AtomicLong) =
+    new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.filter(_.name.contains("graft.turns"))
+          .foreach(_.update.foreach(u => counted.addAndGet(u.asInstanceOf[Long])))
+    }
 
   test("canonicalUrl: adversarial crawl-URL shapes collapse to the right key") {
     import graft.operators.Dedup
@@ -200,7 +197,7 @@ class ModulesSpec extends AnyFunSuite {
 
   test("streaming session windows under readStream match batch session_window") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_sess_in").toString
+    val in = tempDir("graft_sess_in")
     // remap timestamps into bursts: 5 turns 1 s apart, then a 1 h gap —
     // multiple sessions per conversation at the 10-minute gap, and a
     // conversation's turns scatter across files/triggers so the state
@@ -212,63 +209,50 @@ class ModulesSpec extends AnyFunSuite {
         base + (t.turn_idx / 5) * 3600000L + t.turn_idx * 1000L)))
     spark.createDataset(turns).repartition(3).write.mode("overwrite").parquet(in)
 
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val sc = spark.sparkContext
     val counted = new java.util.concurrent.atomic.AtomicLong
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        e.taskInfo.accumulables.filter(_.name.contains("graft.turns"))
-          .foreach(_.update.foreach(u => counted.addAndGet(u.asInstanceOf[Long])))
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sess-drain"))
-          drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    val q = StreamingExtract.sessionMetrics(spark, in).writeStream
-      .format("memory").queryName("sess_out").outputMode("append").start()
-    q.processAllAvailable()
-    // append mode: nothing may emit until the watermark passes a
-    // session close — the 48 h delay exceeds the whole corpus span
-    assert(spark.table("sess_out").isEmpty)
-    // one far-future sentinel advances the watermark past every real
-    // session; its own session is never emitted (the watermark never
-    // passes it), so the flushed output is exactly the real sessions
-    val sentinel = turns.head.copy(conv_id = "sentinel",
-      ts = new java.sql.Timestamp(base + 365L * 24 * 3600000L))
-    spark.createDataset(Seq(sentinel)).coalesce(1).write.mode("append").parquet(in)
+    val expected = withListener(turnsCounter(counted)) {
+      val q = StreamingExtract.sessionMetrics(spark, in).writeStream
+        .format("memory").queryName("sess_out").outputMode("append").start()
+      q.processAllAvailable()
+      // append mode: nothing may emit until the watermark passes a
+      // session close — the 48 h delay exceeds the whole corpus span
+      assert(spark.table("sess_out").isEmpty)
+      // one far-future sentinel advances the watermark past every real
+      // session; its own session is never emitted (the watermark never
+      // passes it), so the flushed output is exactly the real sessions
+      val sentinel = turns.head.copy(conv_id = "sentinel",
+        ts = new java.sql.Timestamp(base + 365L * 24 * 3600000L))
+      spark.createDataset(Seq(sentinel)).coalesce(1).write.mode("append").parquet(in)
 
-    def batchTwin = {
-      val ctr2 = () => new graft.kernel.Extractor.Counters
-      spark.createDataset(turns)
-        .mapPartitions { it =>
-          val ctr = ctr2()
-          it.map(t => (t.ts, t.conv_id, graft.kernel.Extractor.extract(t, ctr).n_cells))
-        }
-        .toDF("ts", "conv_id", "n_cells")
-        .groupBy(session_window(col("ts"), "10 minutes"), col("conv_id"))
-        .agg(count(lit(1)).as("turns"), sum(col("n_cells")).as("cells"))
-        .select(col("session_window.start"), col("session_window.end"),
-          col("conv_id"), col("turns"), col("cells"))
-        .collect()
-        .map(r => (r.getTimestamp(0).getTime, r.getTimestamp(1).getTime,
-          r.getString(2), r.getLong(3), r.getLong(4))).toSet
+      def batchTwin = {
+        val ctr2 = () => new graft.kernel.Extractor.Counters
+        spark.createDataset(turns)
+          .mapPartitions { it =>
+            val ctr = ctr2()
+            it.map(t => (t.ts, t.conv_id, graft.kernel.Extractor.extract(t, ctr).n_cells))
+          }
+          .toDF("ts", "conv_id", "n_cells")
+          .groupBy(session_window(col("ts"), "10 minutes"), col("conv_id"))
+          .agg(count(lit(1)).as("turns"), sum(col("n_cells")).as("cells"))
+          .select(col("session_window.start"), col("session_window.end"),
+            col("conv_id"), col("turns"), col("cells"))
+          .collect()
+          .map(r => (r.getTimestamp(0).getTime, r.getTimestamp(1).getTime,
+            r.getString(2), r.getLong(3), r.getLong(4))).toSet
+      }
+      val expected = batchTwin
+      // the post-watermark flush may land in a trailing no-data batch;
+      // poke the stream until the output is complete
+      val deadline = System.currentTimeMillis() + 60000
+      while (spark.table("sess_out").count() < expected.size &&
+          System.currentTimeMillis() < deadline) {
+        q.processAllAvailable(); Thread.sleep(200)
+      }
+      q.stop()
+      expected
     }
-    val expected = batchTwin
-    // the post-watermark flush may land in a trailing no-data batch;
-    // poke the stream until the output is complete
-    val deadline = System.currentTimeMillis() + 60000
-    while (spark.table("sess_out").count() < expected.size &&
-        System.currentTimeMillis() < deadline) {
-      q.processAllAvailable(); Thread.sleep(200)
-    }
-    q.stop()
     // the kernel counters flush per task: every turn read (the corpus
     // plus the sentinel) is counted at least once
-    sc.setJobGroup("sess-drain", "listener drain")
-    try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-    assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    sc.removeSparkListener(listener)
     assert(counted.get() >= turns.size + 1,
       s"graft.turns summed ${counted.get()} over ${turns.size + 1} turns read")
     val got = spark.table("sess_out").collect()
@@ -298,7 +282,7 @@ class ModulesSpec extends AnyFunSuite {
 
   test("durable streaming sink: batch-id overwrite makes replayed batches idempotent") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_durable").toString
+    val root = tempDir("graft_durable")
     val in = s"$root/in"
     val io = new graft.pipeline.ParquetTableIO(s"$root/tables")
     val turns = graft.gen.TranscriptGen.corpus(nConvs = 8).turns
@@ -338,42 +322,25 @@ class ModulesSpec extends AnyFunSuite {
 
   test("durable streaming sink flushes the batch island's extraction counters") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val root = Files.createTempDirectory("graft_stream_ctr").toString
+    val root = tempDir("graft_stream_ctr")
     val in = s"$root/in"
     val io = new graft.pipeline.ParquetTableIO(s"$root/tables")
     val turns = graft.gen.TranscriptGen.corpus(nConvs = 6).turns
     spark.createDataset(turns).repartition(2).write.mode("overwrite").parquet(in)
 
     val counted = new java.util.concurrent.atomic.AtomicLong
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    // the listener bus delivers events in order, so once the drain job
-    // starts, every task of the stream's batches has been summed
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        e.taskInfo.accumulables.filter(_.name.contains("graft.turns"))
-          .foreach(_.update.foreach(u => counted.addAndGet(u.asInstanceOf[Long])))
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "ctr-drain"))
-          drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
+    withListener(turnsCounter(counted)) {
       StreamingExtract.runDurableAvailableNow(spark, in, io, s"$root/ckpt").awaitTermination()
-      sc.setJobGroup("ctr-drain", "listener drain")
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      val landed = io.read(spark, StreamingExtract.StreamDataTable).count()
-      assert(landed == turns.size)
-      // accumulators are progress, not truth: a recomputed task counts twice
-      assert(counted.get() >= landed, s"graft.turns summed ${counted.get()} over $landed turns")
-    } finally sc.removeSparkListener(listener)
+    }
+    val landed = io.read(spark, StreamingExtract.StreamDataTable).count()
+    assert(landed == turns.size)
+    // accumulators are progress, not truth: a recomputed task counts twice
+    assert(counted.get() >= landed, s"graft.turns summed ${counted.get()} over $landed turns")
   }
 
   test("durable streaming sink: a two-batch catch-up's lineage n_rows equal the rows landed") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_stream_nrows").toString
+    val root = tempDir("graft_stream_nrows")
     val in = s"$root/in"
     val io = new graft.pipeline.ParquetTableIO(s"$root/tables")
     val turns = graft.gen.TranscriptGen.corpus(nConvs = 8).turns
@@ -392,10 +359,10 @@ class ModulesSpec extends AnyFunSuite {
 
   test("streaming AvailableNow equals batch extraction; second run is incremental no-op") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_stream_in").toString
+    val in = tempDir("graft_stream_in")
     val io = new graft.pipeline.ParquetTableIO(
-      Files.createTempDirectory("graft_stream_tables").toString)
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+      tempDir("graft_stream_tables"))
+    val ckpt = tempDir("graft_stream_ckpt")
 
     val corpus = graft.gen.TranscriptGen.corpus(nConvs = 15)
     spark.createDataset(corpus.turns).repartition(4).write.mode("overwrite").parquet(in)
@@ -424,9 +391,9 @@ class ModulesSpec extends AnyFunSuite {
   test("continuous ingest (Trigger.ProcessingTime) over a growing directory: no dupes, no losses") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val in = Files.createTempDirectory("graft_cont_in").toString
-    val out = Files.createTempDirectory("graft_cont_out").toString
-    val ckpt = Files.createTempDirectory("graft_cont_ckpt").toString
+    val in = tempDir("graft_cont_in")
+    val out = tempDir("graft_cont_out")
+    val ckpt = tempDir("graft_cont_ckpt")
     val corpus = graft.gen.TranscriptGen.corpus(nConvs = 12)
     val (first, late) = corpus.turns.splitAt(corpus.turns.size / 2)
     spark.createDataset(first).coalesce(2).write.mode("overwrite").parquet(in)
@@ -618,7 +585,7 @@ class ModulesSpec extends AnyFunSuite {
     val docs = texts.zipWithIndex.map { case (t, i) =>
       (i.toLong, t, "en", "src0", t.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = Files.createTempDirectory("graft_bpe_unicode").toString
+    val dir = tempDir("graft_bpe_unicode")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // learner symbols must be whole code points — no lone surrogates,
     // no replacement-char mangling

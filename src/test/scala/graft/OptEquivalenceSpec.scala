@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * end-to-end outputs; these tests localize a failure to the specific
   * rewritten kernel.
   */
-class OptEquivalenceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-optequiv-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class OptEquivalenceSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -93,7 +83,7 @@ class OptEquivalenceSpec extends AnyFunSuite {
   }
 
   test("d13 fails the query when a doc_id leaves the argmax key's [0, 2^48) domain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_d13_domain").toString
+    val dir = tempDir("graft_d13_domain")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // a twin of doc 0 whose id is one past the domain: it clusters with
     // doc 0, and its complemented key would wrap into a wrong keeper

@@ -4,39 +4,15 @@ import graft.gen.TranscriptGen
 import graft.model._
 import graft.oracle.Oracle
 import graft.pipeline.{ExtractPipeline, ResumableExtract}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The Spark half of the per-turn-equality gate: pipeline output must
   * equal the plain-Scala oracle for every turn, independent of input
   * order and partitioning, and resume must be idempotent. */
-class PipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val corpus = TranscriptGen.corpus(nConvs = 40)
-
-  private def oracleExtract(turn: Turn): (String, Seq[Cell]) = {
-    val pl = PayloadCodec.decode(turn.text)
-    turn.tool match {
-      case Tool.Quick =>
-        (Oracle.quickText(pl.boxes.toSeq), Oracle.simpleCells(pl.boxes.toSeq))
-      case Tool.TableSimple => ("", Oracle.simpleCells(pl.boxes.toSeq))
-      case Tool.TableBands  => ("", Oracle.bandCells(pl))
-      case Tool.TableRects  => ("", Oracle.rectCells(pl))
-      case Tool.HtmlMain    => (graft.kernel.HtmlMain.extractText(turn.text), Seq.empty)
-      case _                => (turn.text, Seq.empty)
-    }
-  }
 
   test("Spark extraction equals oracle per turn; accumulators populated") {
     import spark.implicits._
@@ -47,7 +23,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.size == corpus.turns.size)
     for (turn <- corpus.turns) {
       val e = got((turn.conv_id, turn.turn_idx))
-      val (expText, expCells) = oracleExtract(turn)
+      val (expText, expCells) = SparkSuite.oracleExtract(turn)
       assert(e.extracted_text == expText, s"${turn.conv_id}/${turn.turn_idx}")
       assert(e.cells.toSeq == expCells, s"${turn.conv_id}/${turn.turn_idx}")
     }
@@ -291,8 +267,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("resumable run: crash-rewrite is idempotent; second run is a no-op") {
     import spark.implicits._
-    val dirA = Files.createTempDirectory("graft_a").toString
-    val dirB = Files.createTempDirectory("graft_b").toString
+    val dirA = tempDir("graft_a")
+    val dirB = tempDir("graft_b")
     val turns = spark.createDataset(corpus.turns)
 
     val processedA = ResumableExtract.run(spark, turns, dirA, nBuckets = 4)
@@ -327,7 +303,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("lineage boxes_dropped is a per-bucket metric derived from the bucket's rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_lin").toString
+    val dir = tempDir("graft_lin")
     val turns = spark.createDataset(corpus.turns)
     ResumableExtract.run(spark, turns, dir, nBuckets = 4)
     val lineage = spark.read.parquet(s"$dir/lineage")
@@ -350,7 +326,7 @@ class PipelineSpec extends AnyFunSuite {
     // regression that slips a repartition/sort before the kernel would
     // ship the full corpus through a shuffle.
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_noshuffle").toString
+    val in = tempDir("graft_noshuffle")
     spark.createDataset(corpus.turns).repartition(4)
       .write.mode("overwrite").parquet(in)
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
@@ -359,20 +335,14 @@ class PipelineSpec extends AnyFunSuite {
         if (t.taskMetrics != null)
           shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    withListener(listener) {
       val metrics = new ExtractPipeline.Metrics(spark)
       ExtractPipeline.extract(
         spark.read.parquet(in).as[Turn], metrics, partitions = 0)
         .foreach(_ => ()) // foreach: an agg would add its own exchange
-      // listener events are delivered asynchronously; give the bus a beat
-      val deadline = System.currentTimeMillis() + 5000
-      while (metrics.turns.value < corpus.turns.size &&
-          System.currentTimeMillis() < deadline) Thread.sleep(100)
-      Thread.sleep(500)
-      assert(shuffleBytes.get() == 0,
-        s"extraction shuffled ${shuffleBytes.get()} bytes — payloads crossed the wire")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(shuffleBytes.get() == 0,
+      s"extraction shuffled ${shuffleBytes.get()} bytes — payloads crossed the wire")
   }
 
   // ── lineage observed on the data write ─────────────────────────────
@@ -393,7 +363,7 @@ class PipelineSpec extends AnyFunSuite {
   test("lineage rows equal a read-back of the written data (16 buckets, empty bucket, UTF-8 order)") {
     import spark.implicits._
     val n = 16
-    val dir = Files.createTempDirectory("graft_lin_rb").toString
+    val dir = tempDir("graft_lin_rb")
     def bucketOf(ids: Seq[String]): Map[String, Int] =
       ids.toDF("id").select($"id", ResumableExtract.bucketOf($"id", n))
         .as[(String, Int)].collect().toMap
@@ -438,16 +408,15 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = spark.sparkContext
-    val dir = Files.createTempDirectory("graft_jobs").toString
+    val dir = tempDir("graft_jobs")
     val dataPath = s"$dir/data"
     def scans(p: SparkPlanInfo): Boolean =
       p.metadata.get("Location").exists(_.contains(dataPath)) || p.children.exists(scans)
     val dataScans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val scanJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    // SQL execution starts precede their jobs on the bus, and the bus
-    // delivers in order: once the drain job is seen, all are counted
+    // SQL execution starts precede their jobs on the bus, which
+    // delivers in order: each job's execution is classified already
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart if scans(s.sparkPlanInfo) =>
@@ -456,33 +425,26 @@ class PipelineSpec extends AnyFunSuite {
       }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        props.map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("lineage-run") =>
-            jobs.incrementAndGet()
-            if (props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-                .exists(dataScans.contains)) scanJobs.incrementAndGet()
-          case Some("lineage-run-end") => drained.countDown()
-          case _ => ()
+        if (props.exists(_.getProperty("spark.jobGroup.id") == "lineage-run")) {
+          jobs.incrementAndGet()
+          if (props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+              .exists(dataScans.contains)) scanJobs.incrementAndGet()
         }
       }
     }
-    sc.addSparkListener(listener)
-    try {
+    withListener(listener) {
       sc.setJobGroup("lineage-run", "resumable run, fresh output")
       try ResumableExtract.run(spark, spark.createDataset(corpus.turns), dir, nBuckets = 4)
       finally sc.clearJobGroup()
-      sc.setJobGroup("lineage-run-end", "listener drain")
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get() > 0, "the run's jobs were not seen")
-      assert(scanJobs.get() == 0,
-        s"${scanJobs.get()} of ${jobs.get()} jobs scanned $dataPath after writing it")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs.get() > 0, "the run's jobs were not seen")
+    assert(scanJobs.get() == 0,
+      s"${scanJobs.get()} of ${jobs.get()} jobs scanned $dataPath after writing it")
   }
 
   test("a write task retried after a failure counts its rows once (child JVM, local[4,2])") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_retry").toString
+    val root = tempDir("graft_retry")
     val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
       java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
       Seq("-cp", sys.props("java.class.path"), "graft.WriteRetryChild", root)
@@ -503,7 +465,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    val dir = Files.createTempDirectory("graft_empty_pending").toString
+    val dir = tempDir("graft_empty_pending")
     val turns = spark.createDataset(TranscriptGen.corpus(nConvs = 3).turns)
     ResumableExtract.run(spark, turns, dir, nBuckets = 16)
     val lineage = spark.read.parquet(s"$dir/lineage")
@@ -524,7 +486,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("resume refuses a changed bucket count: 4 buckets, then 8") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_nb").toString
+    val dir = tempDir("graft_nb")
     val turns = spark.createDataset(corpus.turns)
     ResumableExtract.run(spark, turns, dir, nBuckets = 4)
     val e = intercept[IllegalStateException](ResumableExtract.run(spark, turns, dir, nBuckets = 8))
@@ -535,7 +497,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("resume refuses a lineage table that records no bucket count") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_nb_old").toString
+    val dir = tempDir("graft_nb_old")
     val turns = spark.createDataset(corpus.turns)
     ResumableExtract.run(spark, turns, dir, nBuckets = 4)
     // the lineage layout before n_buckets was recorded
@@ -550,12 +512,10 @@ class PipelineSpec extends AnyFunSuite {
   test("each bucket is placed on one write task: one file per bucket, fresh run and resume") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
     val n = 16
-    val dir = Files.createTempDirectory("graft_one_file").toString
+    val dir = tempDir("graft_one_file")
     val turns = spark.createDataset(corpus.turns)
     // bucket -> names of the parquet files under data/bucket=K/
     def files(): Map[Int, Set[String]] =
@@ -563,18 +523,10 @@ class PipelineSpec extends AnyFunSuite {
         d.getName.stripPrefix("bucket=").toInt ->
           d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
       }.toMap
-    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.executedPlan.toString.contains(s"$dir/data")) writes.add(qe): Unit
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val plan = try {
+    val plan = executions {
       assert(ResumableExtract.run(spark, turns, dir, nBuckets = n) == (0 until n).toSet)
-      Option(writes.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .getOrElse(fail("the data write was not seen")).executedPlan
-    } finally spark.listenerManager.unregister(listener)
+    }.map(_._2.executedPlan).find(_.toString.contains(s"$dir/data"))
+      .getOrElse(fail("the data write was not seen"))
 
     val withTurns = spark.read.parquet(s"$dir/lineage").filter($"turns_done" > 0)
       .select("partition_id").as[Int].collect().toSet

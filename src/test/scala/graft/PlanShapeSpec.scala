@@ -1,16 +1,14 @@
 package graft
 
 import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Physical-plan regression guards: the scale properties the queries
   * were DESIGNED around must survive refactors, not just their
@@ -18,16 +16,7 @@ import scala.jdk.CollectionConverters._
   * to a cartesian product or a sort-based aggregate — the r1 verdict
   * flagged exactly such shapes; these assertions keep them fixed.
   */
-class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-planshape-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -194,7 +183,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("spread: pre-partitioned input gets NO extra Exchange; single-file input fans out") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val tmp = tempDir("graft_spread")
     spark.read.parquet(s"$sfDir/documents.parquet").repartition(8)
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     // force one scan partition per file so the input is provably
@@ -567,26 +556,15 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def assemblyPlan(manual: Option[DataFrame]): SparkPlan = {
     import spark.implicits._
     val corpus = graft.gen.TranscriptGen.corpus(nConvs = 40)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(funcName -> qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val plans = executions {
       ExtractPipeline.assembleBom(
         ExtractPipeline.extract(spark.createDataset(corpus.turns),
           new ExtractPipeline.Metrics(spark)),
         spark.createDataset(corpus.drawings).toDF(),
         spark.createDataset(corpus.convMeta).toDF(), manual)
-      // listener events arrive asynchronously
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!plans.asScala.exists(_._1 == "localCheckpoint") && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    plans.asScala.collectFirst { case ("localCheckpoint", p) => p }
-      .getOrElse(fail(s"no localCheckpoint execution among ${plans.asScala.map(_._1)}"))
+    }
+    plans.collectFirst { case ("localCheckpoint", qe) => qe.executedPlan }
+      .getOrElse(fail(s"no localCheckpoint execution among ${plans.map(_._1)}"))
   }
 
   test("assembleBom plans one conv_id exchange for C2, J2 and C4") {

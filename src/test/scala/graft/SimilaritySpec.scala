@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * recall oracle. Also bounds the LSH bucket geometry so candidate
   * sets stay sub-quadratic as the corpus grows.
   */
-class SimilaritySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-similarity-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+class SimilaritySpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.01"
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.pipeline.{IcebergTableIO, ResumableExtract}
 import graft.v2.FakeV2Catalog
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,17 +22,12 @@ import scala.jdk.CollectionConverters._
   * would both betray it. The resume protocol (full run, no-op re-run,
   * crash-resume, partial resume) runs through it end to end.
   */
-class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach {
+class V2CatalogSpec extends AnyFunSuite with BeforeAndAfterEach with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-v2-catalog-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.catalog.fakev2", classOf[FakeV2Catalog].getName)
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("WARN") }
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.fakev2", classOf[FakeV2Catalog].getName)
+  }
 
   override def beforeEach(): Unit = FakeV2Catalog.reset()
 
